@@ -1,10 +1,10 @@
 #!/usr/bin/env bash
 # One-command repro of the round gates: full test suite, Verify +
-# DuckDB self-check, and the benchmark — the same three artifacts the
+# DuckDB oracle check, and the benchmark — the same three artifacts the
 # driver grades (sbt test / CORRECTNESS / BENCH), from a fresh shell.
 #
-#   scripts/repro.sh            # test + verify@sf0.01 + selfcheck + bench@sf0.1
-#   SF=0.1 scripts/repro.sh     # verify + selfcheck at sf0.1 instead
+#   scripts/repro.sh            # test + verify@sf0.01 + oracle check + bench@sf0.1
+#   SF=0.1 scripts/repro.sh     # verify + oracle check at sf0.1 instead
 #   SKIP_BENCH=1 scripts/repro.sh
 #
 # Env pins (same ones the driver uses):
@@ -21,10 +21,10 @@ BENCH_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 echo "== 1/3 sbt test =="
 sbt -batch test
 
-echo "== 2/3 Verify @ ${SF_DIR} + DuckDB self-check =="
+echo "== 2/3 Verify @ ${SF_DIR} + DuckDB oracle check =="
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify ${SF_DIR} ${OUT}"
-python3 scripts/selfcheck.py "$SF_DIR" "$OUT"
+python3 tools/check.py "$SF_DIR" "$OUT"
 
 if [ "${SKIP_BENCH:-0}" != "1" ]; then
   echo "== 3/3 Bench @ ${BENCH_SF_DIR} =="

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch profiling main (not part of the driver contract, like
-  * [[Profile]]): run catalog entries with a job-level listener that
-  * prints every Spark job's wall time and the call site that triggered
-  * it — the per-ACTION breakdown the multi-action certificate entries
+/** Scratch profiling main (not part of the driver contract): run
+  * catalog entries with a job-level listener that prints every Spark
+  * job's wall time and the call site that triggered it — the per-ACTION
+  * breakdown the multi-action certificate entries
   * (an13/an14/dd21) need, since their cost is spread over ~10 driver
   * actions rather than one big query.
   *
@@ -16,17 +14,7 @@ object ProfileAnn {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("an13_pq_index_persistence", "an14_ivf_index_tombstones")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.textMetaRewrite", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Local scale-up fixture builder (not part of the driver contract).
@@ -45,12 +45,7 @@ object ScaleUp {
     require(args.length == 3, "usage: ScaleUp <srcDir> <outDir> <copies>")
     val (src, out, copies) = (args(0), args(1), args(2).toInt)
     require(copies >= 1 && copies <= 26, "copies must be 1..26 (per-copy letter tags)")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
 
     def read(name: String) = spark.read.parquet(s"$src/$name.parquet")

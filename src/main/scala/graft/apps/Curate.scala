@@ -44,15 +44,7 @@ object Curate {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Curate <sfDir> <outDir> [qualityFloor]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     val floor = args.lift(2).map(_.toDouble).getOrElse(0.1)
     val report = run(spark, args(0), args(1), floor)

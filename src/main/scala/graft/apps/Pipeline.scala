@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.etl.InvoiceFeaturizer
 import graft.ml.{Persistence, Scoring}
+import graft.model.Schemas
 import graft.sources.PurchaseCsv
-import graft.stream.{InvoiceStateMachine, PurchaseLine, Router}
+import graft.stream.{IdempotentSink, InvoiceStateMachine, PurchaseLine, Router}
 
 /** The reference's online pipeline (`InvoicePipeline.main`,
   * `InvoicePipeline.scala:31-154`) as a Structured Streaming application
@@ -61,13 +62,7 @@ object Pipeline {
       "<kmThresholdFile> <bisModelDir> <bisThresholdFile> <outDir> [--once]")
     val Array(recordsDir, kmDir, kmThr, bisDir, bisThr, outDir) = args.take(6)
     val once = args.contains("--once")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-invoice-pipeline")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(Some("graft-invoice-pipeline"))
     spark.sparkContext.setLogLevel("WARN")
     val queries = run(spark, recordsDir, kmDir, kmThr, bisDir, bisThr, outDir, once)
     if (once) queries.foreach(_.awaitTermination())
@@ -96,19 +91,17 @@ object Pipeline {
     val bisCenters = BisectingKMeansModel.load(bisDir).clusterCenters.map(_.toArray.toSeq).toSeq
     val bisThreshold = Persistence.loadThreshold(bisThr)
 
-    val schema = StructType(Seq(
-      StructField("key", StringType), StructField("value", StringType)))
     val staged = s"$outDir/_staged"
     Seq(s"$staged/cancelled", s"$staged/good")
       .foreach(d => new java.io.File(d).mkdirs())
     val trigger = if (once) Trigger.AvailableNow() else Trigger.ProcessingTime("20 seconds")
     // update-mode branches (stateful operators re-emit on update) cannot
     // use the append-only file sink directly — write each update batch
-    // idempotently (foreachBatch is at-least-once; see writeBatch)
+    // idempotently (foreachBatch is at-least-once; see IdempotentSink)
     def updateSink(df: DataFrame, name: String) = df.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, s"$outDir/$name", batchId)
+        IdempotentSink.writeBatch(batch, s"$outDir/$name", batchId)
       }
       .option("checkpointLocation", s"$outDir/_checkpoints/$name")
       .trigger(trigger)
@@ -117,19 +110,19 @@ object Pipeline {
     // three routes out of the same cached batch (F1 ∘ F2 ∘ F4). The
     // invalid route is final output; cancelled/good are staged for the
     // stateful consumers below.
-    val qRoute = Router.classified(spark.readStream.schema(schema).parquet(recordsDir))
+    val qRoute = Router.classified(spark.readStream.schema(Schemas.kafkaRecord).parquet(recordsDir))
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.cache()
         try {
-          writeBatch(cached.filter(col("route") === "invalid")
+          IdempotentSink.writeBatch(cached.filter(col("route") === "invalid")
             .select(col("key"), col("value")), s"$outDir/facturas_erroneas", batchId)
           // per-batch distinct (A2, ref :68-71) + arrival timestamp for
           // the processing-time window
-          writeBatch(graft.stream.CancellationWindow.perBatchDistinct(
+          IdempotentSink.writeBatch(graft.stream.CancellationWindow.perBatchDistinct(
               cached.filter(col("route") === "cancelled").select(col("key")), "key")
             .withColumn("ts", current_timestamp()), s"$staged/cancelled", batchId)
-          writeBatch(cached.filter(col("route") === "good")
+          IdempotentSink.writeBatch(cached.filter(col("route") === "good")
             .select(col("key"), col("value")), s"$staged/good", batchId)
         } finally cached.unpersist()
       }
@@ -158,7 +151,7 @@ object Pipeline {
     // foreachBatch (scoring is stateless column math over the emitted
     // updates — it needs no second state store or source scan)
     val purchases = toPurchaseLines(PurchaseCsv.parseLines(
-      spark.readStream.schema(schema).parquet(s"$staged/good/b*").select($"value")))
+      spark.readStream.schema(Schemas.kafkaRecord).parquet(s"$staged/good/b*").select($"value")))
     val idleMs = if (once) 0L else 20000L // delete-on-idle ≈ one trigger
     def anomalies(aggs: DataFrame, centers: Seq[Seq[Double]], threshold: Double): DataFrame =
       Scoring.score(aggs, InvoiceFeaturizer.FeatureCols.map(featureCol), centers, threshold)
@@ -172,9 +165,9 @@ object Pipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.cache()
         try {
-          writeBatch(anomalies(cached, kmCenters, kmThreshold),
+          IdempotentSink.writeBatch(anomalies(cached, kmCenters, kmThreshold),
             s"$outDir/anomalias_kmeans", batchId)
-          writeBatch(anomalies(cached, bisCenters, bisThreshold),
+          IdempotentSink.writeBatch(anomalies(cached, bisCenters, bisThreshold),
             s"$outDir/anomalias_bisect_kmeans", batchId)
         } finally cached.unpersist()
       }
@@ -184,12 +177,6 @@ object Pipeline {
 
     Seq(qRoute, qCancel, qAnomalies)
   }
-
-  /** See [[graft.stream.IdempotentSink]] — foreachBatch is at-least-once,
-    * so every sink in this app commits batches through the idempotent
-    * staging/rename protocol. */
-  private[graft] def writeBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
-    graft.stream.IdempotentSink.writeBatch(batch, dir, batchId)
 
   /** InvoiceAgg column name for a training feature-column name (the agg
     * emits `time_of_day`/`number_items`; training used `time`/

@@ -1,5 +1,7 @@
 package graft.apps
 
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.sql.SparkSession
 
 import graft.etl.InvoiceFeaturizer
@@ -26,14 +28,7 @@ object Train {
     val Array(dataDir, modelDir, thresholdFile) = args.take(3)
     val algo = args.lift(3).getOrElse("kmeans")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName(s"graft-train-$algo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(Some(s"graft-train-$algo"))
     spark.sparkContext.setLogLevel("WARN")
     run(spark, dataDir, modelDir, thresholdFile, algo)
     spark.stop()
@@ -51,19 +46,17 @@ object Train {
     val assembled = Training.assemble(feats, InvoiceFeaturizer.FeatureCols)
     // reference sweeps k = 1..20 (RDD API); ml KMeans requires k ≥ 2
     val ks = 2 to 20
+    // the two model types share no supertype that carries clusterCenters
+    def elbowModel[M <: MLWritable](sweep: Seq[(Int, M, Double)])(
+        clusterCenters: M => Array[Vector]): (Int, Seq[Seq[Double]]) = {
+      val (k, model, _) = sweep(Training.elbowSelection(sweep.map(_._3), ElbowRatio))
+      model.write.overwrite().save(modelDir)
+      (k, clusterCenters(model).map(_.toArray.toSeq).toSeq)
+    }
     val (selectedK, centers) = algo match {
       case "bisecting" =>
-        val sweep = Training.bisectingSweep(assembled, ks, seed = 1L)
-        val i = Training.elbowSelection(sweep.map(_._3), ElbowRatio)
-        val (k, model, _) = sweep(i)
-        model.write.overwrite().save(modelDir)
-        (k, model.clusterCenters.map(_.toArray.toSeq).toSeq)
-      case _ =>
-        val sweep = Training.kMeansSweep(assembled, ks, seed = 1L)
-        val i = Training.elbowSelection(sweep.map(_._3), ElbowRatio)
-        val (k, model, _) = sweep(i)
-        model.write.overwrite().save(modelDir)
-        (k, model.clusterCenters.map(_.toArray.toSeq).toSeq)
+        elbowModel(Training.bisectingSweep(assembled, ks, seed = 1L))(_.clusterCenters)
+      case _ => elbowModel(Training.kMeansSweep(assembled, ks, seed = 1L))(_.clusterCenters)
     }
     val scored = Scoring.score(feats, InvoiceFeaturizer.FeatureCols, centers, 0.0)
     val threshold = Training.threshold(scored, "dist", ThresholdRank)

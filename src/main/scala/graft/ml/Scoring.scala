@@ -20,10 +20,6 @@ object Scoring {
   def sqDistToNearest(features: Column, centers: Seq[Seq[Double]]): Column =
     graft.functions.SqDistToNearest(features, centers)
 
-  /** Anomaly predicate: nearest-centroid sqdist above threshold. */
-  def isAnomaly(features: Column, centers: Seq[Seq[Double]], threshold: Double): Column =
-    sqDistToNearest(features, centers) > threshold
-
   /** Score a featurized frame: adds `dist` and `is_anomaly`. */
   def score(df: DataFrame, featureCols: Seq[String],
             centers: Seq[Seq[Double]], threshold: Double): DataFrame = {

@@ -32,16 +32,12 @@ object Training {
     * scheduling; a k-sweep is driver-job-bound, not compute-bound). */
   private def sweep[M](df: DataFrame, ks: Seq[Int], parallelism: Int)(
       fit: (DataFrame, Int) => (M, Double)): Seq[(Int, M, Double)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val cached = df.cache()
     cached.count() // materialize once before concurrent fits
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(parallelism, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.traverse(ks)(k => Future { val (m, cost) = fit(cached, k); (k, m, cost) }),
-      Duration.Inf)
-    finally { pool.shutdown(); cached.unpersist() }
+    try graft.ops.Actions.awaitAll(
+      ks.map(k => () => { val (m, cost) = fit(cached, k); (k, m, cost) }),
+      maxThreads = parallelism)
+    finally cached.unpersist(): Unit
   }
 
   def kMeansSweep(df: DataFrame, ks: Seq[Int], seed: Long = 1L,

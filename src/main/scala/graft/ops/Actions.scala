@@ -1,5 +1,9 @@
 package graft.ops
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -42,4 +46,30 @@ object Actions {
   /** A frame's row count as a 1-row aggregate, composable into
     * [[longs]] (the `df.count()` action, deferred). */
   def countOf(df: DataFrame): DataFrame = df.agg(count(lit(1)).as("n"))
+
+  /** Run independent driver-side jobs (sink commits, model fits)
+    * concurrently on a fixed pool of their own — at most `maxThreads`,
+    * one per job by default — and return their results by position.
+    *
+    * Every job is awaited before this returns or throws: on failure the
+    * first failing job's exception (by position) is rethrown with the
+    * other failures attached as suppressed, and no sibling is still
+    * running. A caller's cleanup (`unpersist`) and the engine's retry of
+    * a failed micro-batch therefore never overlap an orphan writer in
+    * the same batch directory. */
+  def awaitAll[T](jobs: Seq[() => T], maxThreads: Int = Int.MaxValue): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(maxThreads, jobs.size)))
+    try {
+      val outcomes = jobs
+        .map(job => pool.submit(new Callable[T] { def call(): T = job() }))
+        .map(f => Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
+      val failures = outcomes.collect { case Failure(e) => e }
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+      outcomes.map(_.get)
+    } finally pool.shutdown()
+  }
 }

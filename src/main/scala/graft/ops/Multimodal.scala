@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata structs.
@@ -27,17 +26,6 @@ object Multimodal {
   case class MediaMeta(width: Int, height: Int, channels: Int, format: String,
                        nPixels: Long, sumR: Long, sumG: Long, sumB: Long,
                        momR: Long)
-
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("format", StringType, nullable = false),
-    StructField("n_pixels", LongType, nullable = false),
-    StructField("sum_r", LongType, nullable = false),
-    StructField("sum_g", LongType, nullable = false),
-    StructField("sum_b", LongType, nullable = false),
-    StructField("mom_r", LongType, nullable = false)))
 
   // ------------------------------------------------ deterministic fixture —
 

@@ -843,12 +843,6 @@ object Similarity {
     rankAdc(scored, k, shortlist)
   }
 
-  /** The rotation matrix of [[opqArtifacts]] for spec-level orthogonality
-    * checks. */
-  def opqRotation(corpus: DataFrame, idCol: String, vecCol: String,
-                  key: String, m: Int, ksub: Int, seed: Long): Array[Array[Double]] =
-    opqArtifacts(corpus, idCol, vecCol, key, m, ksub, seed)._1
-
   // --------------------------------------------- persisted PQ/OPQ index —
 
   /** The distributed half of a persisted PQ index: one (id, codes) row

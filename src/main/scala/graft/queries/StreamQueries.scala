@@ -462,7 +462,7 @@ object StreamQueries {
             "batch per chunk file under maxFilesPerTrigger=1; did the " +
             "engine's file batching change?)")
         val dim = s.read.parquet(s"$dimPath/v$id")
-        graft.apps.Pipeline.writeBatch(
+        graft.stream.IdempotentSink.writeBatch(
           batch.join(broadcast(dim), "user_id"), outPath, id)
       }
       .start()
@@ -2793,7 +2793,8 @@ object StreamQueries {
       // keeper write carries the whole probe/verify pipeline; the other
       // three are small jobs that used to wait behind it). Each commit
       // keeps its own atomic staging+rename protocol; all four are
-      // awaited before the caller's fold policy runs, so the
+      // awaited, even when one fails, before the caller's fold policy
+      // or unpersist runs, so the
       // single-compactor-per-directory contract is untouched, and a
       // failure in any write still fails the batch (at-least-once retry
       // through the idempotent markers, exactly as the serial shape).
@@ -2804,21 +2805,17 @@ object StreamQueries {
       //  - ID-KEYED digests (one row per arrival, not distinct h): the
       //    deletable layout — a takedown can subtract one document's
       //    row without losing a digest another live document carries
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val commits = Seq(
-        Future(graft.stream.IdempotentSink.writeBatch(
-          keepers, sinkDir, batchId)),
-        Future(graft.stream.IdempotentSink.writeRoutedBatch(
+      graft.ops.Actions.awaitAll(Seq(
+        () => graft.stream.IdempotentSink.writeBatch(
+          keepers, sinkDir, batchId),
+        () => graft.stream.IdempotentSink.writeRoutedBatch(
           newBands.withColumn("band_bucket",
             graft.ops.Dedup.bandBucket($"band")),
-          bandsDir, "band_bucket", batchId)),
-        Future(graft.stream.IdempotentSink.writeBatch(
-          withH.select($"doc_id".as("id"), $"h"), digestsDir, batchId)),
-        Future(graft.stream.IdempotentSink.writeBatch(
+          bandsDir, "band_bucket", batchId),
+        () => graft.stream.IdempotentSink.writeBatch(
+          withH.select($"doc_id".as("id"), $"h"), digestsDir, batchId),
+        () => graft.stream.IdempotentSink.writeBatch(
           batch.select($"doc_id", $"text"), corpusDir, batchId)))
-      commits.foreach(
-        Await.result(_, scala.concurrent.duration.Duration.Inf))
     } finally {
       newBandsRef.foreach(_.unpersist())
       batch.unpersist(): Unit
@@ -2891,16 +2888,12 @@ object StreamQueries {
       // routes (125 at the 16× cell) — unhashed, every task writes a
       // footer per route it holds and the append was the dominant cost
       // of the 16× cell
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val commits = Seq(
-        Future(graft.stream.IdempotentSink.writeBatch(
-          keepers, keepersDir, batchId)),
-        Future(graft.stream.IdempotentSink.writeRoutedBatch(
+      graft.ops.Actions.awaitAll(Seq(
+        () => graft.stream.IdempotentSink.writeBatch(
+          keepers, keepersDir, batchId),
+        () => graft.stream.IdempotentSink.writeRoutedBatch(
           fresh.withColumn("cell_route", $"cell"), idxDir, "cell_route",
           batchId, onePerRoute = true)))
-      commits.foreach(
-        Await.result(_, scala.concurrent.duration.Duration.Inf))
     } finally fresh.unpersist(): Unit
   }
 

@@ -630,8 +630,8 @@ object TextQueries {
 
     // Long-document selection through the TextMetaRewrite optimizer rule
     // (graft.plans): the filter is WRITTEN as `length(text) > 400`, but
-    // under `spark.graft.textMetaRewrite=true` (set by Verify/Bench/
-    // tests) the injected rule substitutes the materialized `n_chars`
+    // under `spark.graft.textMetaRewrite=true` (set by GraftSession)
+    // the injected rule substitutes the materialized `n_chars`
     // twin — the predicate reaches the parquet scan as a pushed long
     // comparison and the aggregate never reads the text column at all
     // (both pinned in ExtensionsSpec). The oracle measures the REAL

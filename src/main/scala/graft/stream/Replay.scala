@@ -1,6 +1,5 @@
 package graft.stream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Rate-limited replay producer — the reference's demo harness
@@ -22,12 +21,7 @@ object Replay {
       sys.error("usage: Replay <csvPathOrDir> [rowsPerSecond]"))
     val rate = args.lift(1).map(_.toInt).getOrElse(150)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-replay")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(Some("graft-replay"))
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

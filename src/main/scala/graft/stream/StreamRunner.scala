@@ -118,10 +118,17 @@ object StreamRunner {
   /** Scratch inputs created by [[asStream]] must outlive the returned
     * stream (readers list the dir per trigger) — and foreachBatch sink
     * dirs must outlive the lazy DataFrame returned over them — so they
-    * are deleted at JVM exit instead of eagerly. */
-  private[graft] def deleteOnExit(dir: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      deleteRecursively(new java.io.File(dir))))
+    * are deleted at JVM exit instead of eagerly, by one shutdown hook
+    * over every registered dir (a hook per call would pile up for as
+    * long as the session lives). */
+  private[graft] def deleteOnExit(dir: String): Unit = {
+    exitHook
+    exitDirs.add(dir): Unit
+  }
+
+  private val exitDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    exitDirs.forEach(dir => deleteRecursively(new java.io.File(dir)))))
 
   private def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)

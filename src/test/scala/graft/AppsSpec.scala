@@ -18,20 +18,20 @@ class AppsSpec extends SparkSuite {
     def committed() = graft.stream.IdempotentSink.read(s, dir)
     // first attempt commits batch 7 as one atomic directory, "crashes"
     // before the streaming checkpoint advances
-    Pipeline.writeBatch(s.range(100).toDF("v").repartition(4), dir, batchId = 7)
+    graft.stream.IdempotentSink.writeBatch(s.range(100).toDF("v").repartition(4), dir, batchId = 7)
     assert(committed().count() == 100)
     val files7 = new java.io.File(s"$dir/b7").list().sorted.toSeq
     // the replayed batch produces FEWER files (partition count changed
     // across restart) — the committed directory must be untouched: same
     // names, same contents, no duplicates (a downstream file-stream source
     // has already listed the first-attempt names)
-    Pipeline.writeBatch(s.range(100).toDF("v").repartition(2), dir, batchId = 7)
+    graft.stream.IdempotentSink.writeBatch(s.range(100).toDF("v").repartition(2), dir, batchId = 7)
     assert(committed().count() == 100,
       "replay must not duplicate rows or replace committed files")
     assert(new java.io.File(s"$dir/b7").list().sorted.toSeq == files7,
       "replay must leave the committed name->content mapping untouched")
     // a later batch lands alongside, earlier commit untouched
-    Pipeline.writeBatch(s.range(5).toDF("v"), dir, batchId = 8)
+    graft.stream.IdempotentSink.writeBatch(s.range(5).toDF("v"), dir, batchId = 8)
     assert(committed().count() == 105)
     // staging is cleaned up per batch
     val staging = new java.io.File(s"$dir/_staging")

@@ -693,4 +693,20 @@ class DedupSpec extends SparkSuite {
     assert(got == Seq(a.count(), b.count(), 36L * 37L / 2),
       s"merged scalars diverged: $got")
   }
+
+  test("Actions.awaitAll lets every sibling finish before it rethrows the " +
+    "first failure, with later failures suppressed") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val fast = new IllegalStateException("fails fast")
+    val late = new IllegalArgumentException("fails late")
+    val e = intercept[IllegalStateException] {
+      graft.ops.Actions.awaitAll(Seq(
+        () => throw fast,
+        () => { Thread.sleep(500); siblingDone.set(true) },
+        () => { Thread.sleep(100); throw late }))
+    }
+    assert(siblingDone.get(), "rethrown while a sibling was still running")
+    assert(e eq fast, s"expected the failing job's exception, got $e")
+    assert(e.getSuppressed.toSeq == Seq(late))
+  }
 }

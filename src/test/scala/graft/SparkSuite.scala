@@ -5,16 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for specs — one JVM-wide session, small local parallelism. */
 object SparkSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.graft.textMetaRewrite", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // local[4] and 4 partitions whatever $SPARK_GRAFT_CPUS and
+  // $SPARK_MASTER say, so results do not depend on the host
+  lazy val spark: SparkSession =
+    GraftSession(Some("graft-tests"), master = "local[4]", partitions = 4)
 
   val Sf = "/root/testdata/sf0.001"
 }
