@@ -1,7 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.clustering.{BisectingKMeans, BisectingKMeansModel, KMeans, KMeansModel}
-import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,26 +24,29 @@ object Training {
     if (mod <= 1) df
     else df.filter(pmod(xxhash64(col(idCol)), lit(mod)) === 0)
 
+  /** Fit one model per k. The frame is laid out once as one partition
+    * sorted by the feature vector: a fit reads only `features`, and equal
+    * vectors are interchangeable, so every fit sees the same rows in the
+    * same order however `df` was partitioned, and the result does not
+    * depend on cluster size. Each fit is a chain of small driver-bound
+    * jobs, so all fits run at once, one thread each; they are seeded and
+    * independent, so running them together changes no result. */
+  private def sweep[M](df: DataFrame, ks: Seq[Int])(
+      fit: (DataFrame, Int) => (M, Double)): Seq[(Int, M, Double)] = {
+    val sorted = df.repartition(1)
+      .sortWithinPartitions(vector_to_array(col("features"))).cache()
+    sorted.count() // materialize once before concurrent fits
+    try graft.ops.Actions.awaitAll(
+      ks.map(k => () => { val (m, cost) = fit(sorted, k); (k, m, cost) }))
+    finally sorted.unpersist(): Unit
+  }
+
   /** k-sweep KMeans training (reference A10, `train.scala:55-59`): fit one
     * model per k, return (k, model, cost). Cost = within-set sum of squared
     * distances (`summary.trainingCost`, the `computeCost` equivalent). */
-  /** Run independent fits concurrently (each fit is seeded and
-    * deterministic on its own, so results are order-stable regardless of
-    * scheduling; a k-sweep is driver-job-bound, not compute-bound). */
-  private def sweep[M](df: DataFrame, ks: Seq[Int], parallelism: Int)(
-      fit: (DataFrame, Int) => (M, Double)): Seq[(Int, M, Double)] = {
-    val cached = df.cache()
-    cached.count() // materialize once before concurrent fits
-    try graft.ops.Actions.awaitAll(
-      ks.map(k => () => { val (m, cost) = fit(cached, k); (k, m, cost) }),
-      maxThreads = parallelism)
-    finally cached.unpersist(): Unit
-  }
-
   def kMeansSweep(df: DataFrame, ks: Seq[Int], seed: Long = 1L,
-                  maxIter: Int = 20, initMode: String = "k-means||",
-                  parallelism: Int = 4): Seq[(Int, KMeansModel, Double)] =
-    sweep(df, ks, parallelism) { (data, k) =>
+                  maxIter: Int = 20, initMode: String = "k-means||"): Seq[(Int, KMeansModel, Double)] =
+    sweep(df, ks) { (data, k) =>
       val m = new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
         .setInitMode(initMode)
         .setFeaturesCol("features").fit(data)
@@ -52,8 +55,8 @@ object Training {
 
   /** BisectingKMeans twin (reference `trainBisecting.scala:55-59`). */
   def bisectingSweep(df: DataFrame, ks: Seq[Int], seed: Long = 1L,
-                     maxIter: Int = 20, parallelism: Int = 4): Seq[(Int, BisectingKMeansModel, Double)] =
-    sweep(df, ks, parallelism) { (data, k) =>
+                     maxIter: Int = 20): Seq[(Int, BisectingKMeansModel, Double)] =
+    sweep(df, ks) { (data, k) =>
       val m = new BisectingKMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
         .setFeaturesCol("features").fit(data)
       (m, m.summary.trainingCost)

@@ -48,8 +48,8 @@ object Actions {
   def countOf(df: DataFrame): DataFrame = df.agg(count(lit(1)).as("n"))
 
   /** Run independent driver-side jobs (sink commits, model fits)
-    * concurrently on a fixed pool of their own — at most `maxThreads`,
-    * one per job by default — and return their results by position.
+    * concurrently on a pool of their own, one thread per job, and return
+    * their results by position.
     *
     * Every job is awaited before this returns or throws: on failure the
     * first failing job's exception (by position) is rethrown with the
@@ -57,9 +57,8 @@ object Actions {
     * running. A caller's cleanup (`unpersist`) and the engine's retry of
     * a failed micro-batch therefore never overlap an orphan writer in
     * the same batch directory. */
-  def awaitAll[T](jobs: Seq[() => T], maxThreads: Int = Int.MaxValue): Seq[T] = {
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(maxThreads, jobs.size)))
+  def awaitAll[T](jobs: Seq[() => T]): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(math.max(1, jobs.size))
     try {
       val outcomes = jobs
         .map(job => pool.submit(new Callable[T] { def call(): T = job() }))

@@ -1855,15 +1855,15 @@ object PipelineQueries {
     // Elbow-selected k over a cost sweep (A9/A10), documented semantics.
     // Like ml05: the 7 fits run on a bounded deterministic hash sample
     // (the elbow reads the cost curve's *shape* — per-sample SSE has the
-    // same shape), single-partition + sorted so the raw double costs are
-    // replay-deterministic, capped iterations, random init. Output is the
-    // self-certifying [[elbowCert]] row; withMonotone is on (the
+    // same shape), which the sweep lays out as one partition sorted by
+    // feature vector so the raw double costs are replay-deterministic;
+    // capped iterations, random init. Output is the self-certifying
+    // [[elbowCert]] row; withMonotone is on (the
     // embeddings cost curve is measured strictly decreasing at every
     // local SF — max ratio 0.997; ml05's invoice curve is not, see there).
     "ml03_elbow_selection" -> { (s, dir) =>
       import s.implicits._
       val emb = Training.hashSample(Tables.embeddings(s, dir), "vec_id", 4)
-        .repartition(1).sortWithinPartitions(col("vec_id"))
       val assembled = emb.select(
         org.apache.spark.ml.functions.array_to_vector(
           col("embedding").cast("array<double>")).as("features"))
@@ -1899,14 +1899,11 @@ object PipelineQueries {
       // of invoices, not the corpus (the elbow reads the cost curve's
       // shape; at 100 TB a full-corpus k-sweep is 19 full passes for a
       // scalar decision). Costs are per-sample SSE — same curve shape.
-      // single-partition + total sort: float accumulation during training
-      // must see a fully deterministic row order (shuffle-fetch order and
-      // range-partition boundaries vary run to run) or the raw double
-      // costs in the output wiggle in the last bits. Fine here because
-      // the input is a bounded sample, not the corpus.
+      // Float accumulation during training must see a fully deterministic
+      // row order (shuffle-fetch order and range-partition boundaries vary
+      // run to run) or the raw double costs in the output wiggle in the
+      // last bits: the sweep fits on one partition sorted by feature vector.
       val feats = Training.hashSample(InvoiceQueries.invoiceFeatures(s, dir), "invoice_no", 16)
-        .repartition(1)
-        .sortWithinPartitions(col("invoice_no"))
       val assembled = Training.assemble(feats, InvoiceFeaturizer.FeatureCols)
       // random init: one seeding job per fit instead of k-means||'s
       // multi-step init — 19 fits of a sweep are driver-job-bound, and

@@ -172,6 +172,32 @@ class AppsSpec extends SparkSuite {
     assert(new java.io.File(s"$base/out/anomalias_bisect_kmeans").exists())
   }
 
+  test("train job: k, threshold and centers do not depend on the shuffle partition count") {
+    val s = spark
+    val conf = s.conf
+    val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+      .map(key => key -> conf.getOption(key))
+    val base = java.nio.file.Files.createTempDirectory("train-inv-").toString
+    val results = try {
+      conf.set("spark.sql.adaptive.enabled", "false")
+      Seq(1, 4, 7).map { n =>
+        conf.set("spark.sql.shuffle.partitions", n.toString)
+        val model = s"$base/model_$n"
+        val (k, thr) = Train.run(s, sf, model, s"$base/thr_$n.txt", "kmeans")
+        val centers = org.apache.spark.ml.clustering.KMeansModel.load(model)
+          .clusterCenters.map(_.toArray.toSeq).toSeq
+        n -> (k, thr, centers)
+      }
+    } finally saved.foreach {
+      case (key, Some(v)) => conf.set(key, v)
+      case (key, None) => conf.unset(key)
+    }
+    val distinct = results.map(_._2).distinct
+    assert(distinct.size == 1,
+      results.map { case (n, (k, thr, _)) => s"partitions=$n: k=$k threshold=$thr" }
+        .mkString("Train.run differs across partitionings: ", "; ", ""))
+  }
+
   test("insights job end-to-end: consistent sessions/funnel/retention/value " +
     "reports, deterministic across runs") {
     val s = spark

@@ -30,6 +30,27 @@ class MlSpec extends SparkSuite {
     assert(withNull.isNullAt(0), s"null element must null the result, got $withNull")
   }
 
+  test("k-sweep: fitting every k at once gives each k's lone fit, bit for bit") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(11)
+    // four blobs in 3-d, spread over several partitions
+    val rows = (0 until 400).map { i =>
+      val c = i % 4 * 10.0
+      (c + rnd.nextGaussian(), -c + rnd.nextGaussian(), rnd.nextGaussian() * 3)
+    }
+    val df = Training.assemble(rows.toDF("a", "b", "c").repartition(3), Seq("a", "b", "c"))
+    val together = Training.kMeansSweep(df, 2 to 6)
+    assert(together.map(_._1) == (2 to 6))
+    together.foreach { case (k, model, cost) =>
+      val Seq((k1, alone, aloneCost)) = Training.kMeansSweep(df, Seq(k))
+      assert(k1 == k)
+      assert(cost == aloneCost, s"k=$k: swept cost $cost, lone cost $aloneCost")
+      assert(model.clusterCenters.toSeq == alone.clusterCenters.toSeq,
+        s"k=$k: centers differ between the sweep and the lone fit")
+    }
+  }
+
   test("threshold artifact round-trips through the text file") {
     val p = java.nio.file.Files.createTempDirectory("thr-").toString + "/threshold.txt"
     Persistence.saveThreshold(p, 123.456)
