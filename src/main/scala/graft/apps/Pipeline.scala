@@ -1,16 +1,17 @@
 package graft.apps
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.{BisectingKMeansModel, KMeansModel}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.etl.InvoiceFeaturizer
 import graft.ml.{Persistence, Scoring}
 import graft.model.Schemas
 import graft.sources.PurchaseCsv
-import graft.stream.{IdempotentSink, InvoiceStateMachine, PurchaseLine, Router}
+import graft.stream.{IdempotentSink, InvoiceStateMachine, PurchaseLine, Router, StreamRunner}
 
 /** The reference's online pipeline (`InvoicePipeline.main`,
   * `InvoicePipeline.scala:31-154`) as a Structured Streaming application
@@ -77,11 +78,7 @@ object Pipeline {
     * run concurrently (the staged routes ride one trigger behind). */
   def run(spark: SparkSession, recordsDir: String, kmDir: String, kmThr: String,
           bisDir: String, bisThr: String, outDir: String,
-          once: Boolean): Seq[StreamingQuery] =
-      // state-store partition count pinned per StreamRunner.StatePartitions
-      // (captured at each start(); decoupled from the session's batch
-      // shuffle setting and therefore from core count)
-      graft.stream.StreamRunner.pinnedStatePartitions(spark) {
+          once: Boolean): Seq[StreamingQuery] = {
     import spark.implicits._
 
     // models + thresholds load once on the driver (ref :46-47); centers
@@ -92,8 +89,17 @@ object Pipeline {
     val bisThreshold = Persistence.loadThreshold(bisThr)
 
     val staged = s"$outDir/_staged"
-    Seq(s"$staged/cancelled", s"$staged/good")
-      .foreach(d => new java.io.File(d).mkdirs())
+    // through the Hadoop FileSystem of outDir, as IdempotentSink writes
+    // (java.io.File would make a local `hdfs:/...` tree for a remote one)
+    val fs = new Path(staged).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(s"$staged/cancelled", s"$staged/good").foreach(d => fs.mkdirs(new Path(d)))
+    // every query starts on ONE state partition (one store per stateful
+    // operator, so one commit per operator per trigger; why 1, and why
+    // changing it needs a new checkpoint: StreamRunner.StatePartitions).
+    // The count is captured at start(), so the session-global pin wraps
+    // start() alone — never the model loads or an await.
+    def start(writer: DataStreamWriter[Row]): StreamingQuery =
+      StreamRunner.pinnedStatePartitions(spark, partitions = 1)(writer.start())
     val trigger = if (once) Trigger.AvailableNow() else Trigger.ProcessingTime("20 seconds")
     // update-mode branches (stateful operators re-emit on update) cannot
     // use the append-only file sink directly — write each update batch
@@ -110,7 +116,8 @@ object Pipeline {
     // three routes out of the same cached batch (F1 ∘ F2 ∘ F4). The
     // invalid route is final output; cancelled/good are staged for the
     // stateful consumers below.
-    val qRoute = Router.classified(spark.readStream.schema(Schemas.kafkaRecord).parquet(recordsDir))
+    val qRoute = start(Router.classified(
+        spark.readStream.schema(Schemas.kafkaRecord).parquet(recordsDir))
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.cache()
@@ -127,8 +134,7 @@ object Pipeline {
         } finally cached.unpersist()
       }
       .option("checkpointLocation", s"$outDir/_checkpoints/route")
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
     if (once) qRoute.awaitTermination() // drain before the consumers snapshot
 
     // F2 + A2 + A3: staged cancelled keys (already per-batch deduped) →
@@ -144,7 +150,7 @@ object Pipeline {
       .groupBy(window($"ts", "8 minutes", "1 minute"))
       .agg(count(lit(1)).as("n"))
       .select($"window.start".as("w_start"), $"n")
-    val qCancel = updateSink(cancelled, "cancelaciones").start()
+    val qCancel = start(updateSink(cancelled, "cancelaciones"))
 
     // F4 + P7 + A4 + F5 + P9: staged good lines → typed purchases → ONE
     // stateful invoice aggregate, scored against BOTH models in the same
@@ -153,13 +159,7 @@ object Pipeline {
     val purchases = toPurchaseLines(PurchaseCsv.parseLines(
       spark.readStream.schema(Schemas.kafkaRecord).parquet(s"$staged/good/b*").select($"value")))
     val idleMs = if (once) 0L else 20000L // delete-on-idle ≈ one trigger
-    def anomalies(aggs: DataFrame, centers: Seq[Seq[Double]], threshold: Double): DataFrame =
-      Scoring.score(aggs, InvoiceFeaturizer.FeatureCols.map(featureCol), centers, threshold)
-        .filter(col("is_anomaly") === 1L)
-        .select(col("invoice_no").as("key"),
-          to_json(struct(col("invoice_no"), col("avg_unit_price"), col("min_unit_price"),
-            col("max_unit_price"), col("time_of_day"), col("number_items"), col("dist"))).as("value"))
-    val qAnomalies = InvoiceStateMachine(purchases, idleTimeoutMs = idleMs).toDF()
+    val qAnomalies = start(InvoiceStateMachine(purchases, idleTimeoutMs = idleMs).toDF()
       .writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -172,11 +172,20 @@ object Pipeline {
         } finally cached.unpersist()
       }
       .option("checkpointLocation", s"$outDir/_checkpoints/anomalias")
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
 
     Seq(qRoute, qCancel, qAnomalies)
   }
+
+  /** The anomaly sink rows of one model: `aggs` (InvoiceAgg rows) scored
+    * against `centers`, the rows past `threshold` as `(key, JSON value)`. */
+  private[graft] def anomalies(aggs: DataFrame, centers: Seq[Seq[Double]],
+                               threshold: Double): DataFrame =
+    Scoring.score(aggs, InvoiceFeaturizer.FeatureCols.map(featureCol), centers, threshold)
+      .filter(col("is_anomaly") === 1L)
+      .select(col("invoice_no").as("key"),
+        to_json(struct(col("invoice_no"), col("avg_unit_price"), col("min_unit_price"),
+          col("max_unit_price"), col("time_of_day"), col("number_items"), col("dist"))).as("value"))
 
   /** InvoiceAgg column name for a training feature-column name (the agg
     * emits `time_of_day`/`number_items`; training used `time`/
@@ -187,7 +196,7 @@ object Pipeline {
   /** Parsed purchase columns → typed `PurchaseLine`s (stream leg of P7/P8:
     * the exact projection the batch featurizer derives from the same
     * fields). Unparseable dates fall back to the reference's −1 hour. */
-  private def toPurchaseLines(parsed: DataFrame) = {
+  private[graft] def toPurchaseLines(parsed: DataFrame): Dataset[PurchaseLine] = {
     val spark = parsed.sparkSession
     import spark.implicits._
     val ts = InvoiceFeaturizer.parseInvoiceDate($"InvoiceDate")

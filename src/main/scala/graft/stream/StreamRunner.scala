@@ -34,21 +34,31 @@ object StreamRunner {
     * identical code (CHECKS.md r14). On a cluster the same coupling
     * multiplies per-micro-batch overhead with every added core. State
     * partitioning should track state VOLUME, not cores, so every streaming
-    * query in this library starts under this pinned constant — the single
-    * knob to raise when key cardinality actually demands it. */
+    * query in this library starts under a pinned count: this constant by
+    * default, the value to raise when key cardinality actually demands it.
+    *
+    * `apps.Pipeline` passes 1 instead: its stateful inputs are staged and
+    * already filtered (the cancellation window holds one row per open
+    * window plus the cancelled keys inside the watermark, the invoice fold
+    * only live invoices), and through sf0.1 the fixed cost of each store's
+    * per-trigger commit (a delta file written and renamed, whatever it
+    * holds) dominated its triggers. The count is frozen into the
+    * checkpoint, so raising it for a running pipeline needs a new
+    * checkpoint. */
   val StatePartitions = 8
 
   /** Run `body` — which must START its streaming queries inside (the
     * partition count is captured at `start()`) — with
-    * `spark.sql.shuffle.partitions` pinned to [[StatePartitions]], then
-    * restore the session's batch setting. Queries may keep running after
-    * restore (continuous mode): the captured value rides the checkpoint.
+    * `spark.sql.shuffle.partitions` pinned to `partitions` (default
+    * [[StatePartitions]]), then restore the session's batch setting.
+    * Queries may keep running after restore (continuous mode): the
+    * captured value rides the checkpoint.
     *
     * SIDE EFFECT, by construction: the pin mutates the SESSION-GLOBAL
     * conf for the duration of `body`, so (a) any concurrent batch query
-    * on the same session during that window runs with
-    * [[StatePartitions]] shuffle partitions — keep `body` down to the
-    * `start()` call where possible (the pattern [[toMemoryWithQuery]]
+    * on the same session during that window runs with `partitions`
+    * shuffle partitions — keep `body` down to the `start()` call where
+    * possible (the pattern [[toMemoryWithQuery]]
     * uses: start inside the pin, await outside it), and (b) batch work
     * inside `foreachBatch` bodies inherits the pin for the query's whole
     * lifetime via the streaming session cloned at `start()` — restoring
@@ -57,10 +67,11 @@ object StreamRunner {
     * aggregation should set `spark.sql.shuffle.partitions` explicitly on
     * `batch.sparkSession` — that is the cloned session — to reclaim
     * batch-side parallelism. */
-  def pinnedStatePartitions[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+  def pinnedStatePartitions[T](spark: org.apache.spark.sql.SparkSession,
+                               partitions: Int = StatePartitions)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.getOption(key)
-    spark.conf.set(key, StatePartitions.toString)
+    spark.conf.set(key, partitions.toString)
     try body
     finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }

@@ -151,25 +151,62 @@ class AppsSpec extends SparkSuite {
       value.as("value"))
     records.write.mode("overwrite").parquet(s"$base/records")
 
-    // online: one AvailableNow pass through all four branches
+    // online: one AvailableNow pass through all four branches. outDir is
+    // given as a `file:` URI: every directory must be made through the
+    // Hadoop FileSystem, so no local `file:` tree appears under the cwd
+    val shufflePartitions = s.conf.get("spark.sql.shuffle.partitions")
     val queries = Pipeline.run(s, s"$base/records", s"$base/model_km",
       s"$base/thr_km.txt", s"$base/model_bis", s"$base/thr_bis.txt",
-      s"$base/out", once = true)
+      s"file:$base/out", once = true)
     queries.foreach(_.awaitTermination())
+    assert(!new java.io.File(s"file:$base").exists(),
+      "a directory was made with java.io.File instead of outDir's FileSystem")
 
-    val invalid = graft.stream.IdempotentSink.read(s, s"$base/out/facturas_erroneas")
-    val cancels = graft.stream.IdempotentSink.read(s, s"$base/out/cancelaciones")
-    val kmAnoms = graft.stream.IdempotentSink.read(s, s"$base/out/anomalias_kmeans")
+    // one state partition per stateful operator, pinned only around each
+    // start(): the session's batch setting is the same after run
+    assert(s.conf.get("spark.sql.shuffle.partitions") == shufflePartitions)
+    val Seq(_, qCancel, qAnomalies) = queries
+    Seq("cancel" -> qCancel, "anomaly" -> qAnomalies).foreach { case (name, q) =>
+      val parts = q.recentProgress.flatMap(_.stateOperators).map(_.numShufflePartitions).toSeq
+      assert(parts.nonEmpty && parts.forall(_ == 1L),
+        s"$name query state partitions $parts, expected 1 per operator")
+    }
+
+    // every sink equals its batch twin over the records the pipeline read
+    val routed = graft.stream.Router.classified(s.read.parquet(s"$base/records"))
+    def sink(name: String) = graft.stream.IdempotentSink.read(s, s"$base/out/$name")
+    val invalid = sink("facturas_erroneas")
     assert(invalid.count() > 0, "invalid route must fire")
-    // every invalid line is a truncated (%13) one and vice versa
-    assert(invalid.filter(!$"value".endsWith(",ES")).count() == invalid.count())
-    assert(cancels.agg(sum($"n")).head().getLong(0) > 0, "cancellation windows must count")
+    assert(graft.ops.Multiset.equal(invalid,
+      routed.filter($"route" === "invalid").select($"key", $"value")),
+      "invalid sink differs from the batch router")
+    // every distinct cancelled invoice is counted once in each of the 8
+    // windows of 8 minutes sliding by 1 (the last count of each window)
+    val cancelledKeys = routed.filter($"route" === "cancelled").select($"key").distinct().count()
+    assert(cancelledKeys > 0, "cancelled route must fire")
+    val windowCounts = sink("cancelaciones")
+      .withColumn("batch", regexp_extract(input_file_name(), "/b([0-9]+)/", 1).cast("long"))
+      .groupBy($"w_start").agg(max_by($"n", $"batch").as("n"))
+    assert(windowCounts.agg(sum($"n")).head().getLong(0) == 8L * cancelledKeys,
+      "cancellation windows must count 8 x the distinct cancelled keys")
+    // anomalies: the state machine in batch mode over the router's good
+    // lines, scored with the same loaded centers and thresholds
+    val aggs = graft.stream.InvoiceStateMachine(Pipeline.toPurchaseLines(
+      graft.sources.PurchaseCsv.parseLines(routed.filter($"route" === "good").select($"value"))),
+      idleTimeoutMs = 0L).toDF()
+    val kmCenters = org.apache.spark.ml.clustering.KMeansModel.load(s"$base/model_km")
+      .clusterCenters.map(_.toArray.toSeq).toSeq
+    val bisCenters = org.apache.spark.ml.clustering.BisectingKMeansModel.load(s"$base/model_bis")
+      .clusterCenters.map(_.toArray.toSeq).toSeq
+    val kmAnoms = sink("anomalias_kmeans")
     assert(kmAnoms.count() > 0, "anomaly branch must fire")
-    // anomaly payloads are structured JSON with the invoice id
-    val payload = kmAnoms.select(get_json_object($"value", "$.invoice_no").as("inv"))
-    assert(payload.filter($"inv".isNotNull).count() == kmAnoms.count())
-    // bisecting branch wrote (possibly zero rows but the sink must exist)
-    assert(new java.io.File(s"$base/out/anomalias_bisect_kmeans").exists())
+    Seq(("anomalias_kmeans", kmCenters, s"$base/thr_km.txt"),
+        ("anomalias_bisect_kmeans", bisCenters, s"$base/thr_bis.txt")).foreach {
+      case (name, centers, thr) =>
+        assert(graft.ops.Multiset.equal(sink(name),
+          Pipeline.anomalies(aggs, centers, graft.ml.Persistence.loadThreshold(thr))),
+          s"$name differs from the batch twin")
+    }
   }
 
   test("train job: k, threshold and centers do not depend on the shuffle partition count") {

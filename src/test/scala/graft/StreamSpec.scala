@@ -80,6 +80,21 @@ class StreamSpec extends SparkSuite {
         s"state-store partitions $parts, expected ${StreamRunner.StatePartitions}")
       assert(s.conf.get(key) == "27",
         "the session's batch shuffle setting must be restored after the stream")
+      // an explicit count (apps.Pipeline passes 1) is captured the same
+      // way at start(), and the batch setting is restored the same way
+      val explicit = MemoryStream[PurchaseLine]
+      explicit.addData(line("A", 2, 10.0), line("B", 1, 40.0))
+      val pinned = StreamRunner.pinnedStatePartitions(s, partitions = 3) {
+        InvoiceStateMachine(explicit.toDS(), idleTimeoutMs = 0L).toDF()
+          .writeStream.outputMode("update").format("memory").queryName("pin_explicit").start()
+      }
+      try {
+        assert(s.conf.get(key) == "27",
+          "the session's batch shuffle setting must be restored right after start()")
+        pinned.processAllAvailable()
+        val pinnedParts = pinned.lastProgress.stateOperators.map(_.numShufflePartitions).distinct.toSeq
+        assert(pinnedParts == Seq(3L), s"state-store partitions $pinnedParts, expected 3")
+      } finally pinned.stop()
     } finally s.conf.set(key, prior)
   }
 
