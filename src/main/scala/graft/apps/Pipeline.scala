@@ -1,5 +1,7 @@
 package graft.apps
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.{BisectingKMeansModel, KMeansModel}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -10,6 +12,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.etl.InvoiceFeaturizer
 import graft.ml.{Persistence, Scoring}
 import graft.model.Schemas
+import graft.ops.Actions
 import graft.sources.PurchaseCsv
 import graft.stream.{IdempotentSink, InvoiceStateMachine, PurchaseLine, Router, StreamRunner}
 
@@ -72,21 +75,26 @@ object Pipeline {
   }
 
   /** Build and start the branch queries (router + 2 stateful consumers);
-    * factored out so the end-to-end spec drives the same code. In `once`
-    * mode the router drains first, then the staged consumers — three
+    * factored out so the end-to-end spec drives the same code.
+    *
+    * Start order: the router starts first, and the two models and
+    * thresholds load on the calling thread while it drains; the cancel
+    * and anomaly queries start after the loads (in `once` mode, after the
+    * router has drained, so they snapshot every staged batch — three
     * `AvailableNow` queries back-to-back; in continuous mode all three
-    * run concurrently (the staged routes ride one trigger behind). */
+    * run concurrently and the staged routes ride one trigger behind).
+    * A failed load stops the started router before rethrowing.
+    *
+    * Each `foreachBatch` publishes its sinks concurrently through
+    * [[graft.ops.Actions.awaitAll]] (the router's three, the anomaly
+    * query's two), each an [[IdempotentSink.writeBatch]] of its own: the
+    * router's sinks differ in schema, so one routed `partitionBy` write
+    * ([[IdempotentSink.writeRoutedBatch]]) would add a column to
+    * `facturas_erroneas`. */
   def run(spark: SparkSession, recordsDir: String, kmDir: String, kmThr: String,
           bisDir: String, bisThr: String, outDir: String,
           once: Boolean): Seq[StreamingQuery] = {
     import spark.implicits._
-
-    // models + thresholds load once on the driver (ref :46-47); centers
-    // enter the plans as literals (broadcast with the plan)
-    val kmCenters = KMeansModel.load(kmDir).clusterCenters.map(_.toArray.toSeq).toSeq
-    val kmThreshold = Persistence.loadThreshold(kmThr)
-    val bisCenters = BisectingKMeansModel.load(bisDir).clusterCenters.map(_.toArray.toSeq).toSeq
-    val bisThreshold = Persistence.loadThreshold(bisThr)
 
     val staged = s"$outDir/_staged"
     // through the Hadoop FileSystem of outDir, as IdempotentSink writes
@@ -111,6 +119,13 @@ object Pipeline {
       }
       .option("checkpointLocation", s"$outDir/_checkpoints/$name")
       .trigger(trigger)
+    // one batch's sink writes, run concurrently and all awaited before
+    // the cached batch is released (or a failed batch is retried)
+    def publish(batch: DataFrame)(writes: DataFrame => Unit*): Unit = {
+      val cached = batch.cache()
+      try Actions.awaitAll(writes.map(write => () => write(cached)))
+      finally cached.unpersist()
+    }
 
     // ONE pass over the raw source: classify each record once, fan all
     // three routes out of the same cached batch (F1 ∘ F2 ∘ F4). The
@@ -120,21 +135,29 @@ object Pipeline {
         spark.readStream.schema(Schemas.kafkaRecord).parquet(recordsDir))
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = batch.cache()
-        try {
-          IdempotentSink.writeBatch(cached.filter(col("route") === "invalid")
-            .select(col("key"), col("value")), s"$outDir/facturas_erroneas", batchId)
+        publish(batch)(
+          routed => IdempotentSink.writeBatch(routed.filter(col("route") === "invalid")
+            .select(col("key"), col("value")), s"$outDir/facturas_erroneas", batchId),
           // per-batch distinct (A2, ref :68-71) + arrival timestamp for
           // the processing-time window
-          IdempotentSink.writeBatch(graft.stream.CancellationWindow.perBatchDistinct(
-              cached.filter(col("route") === "cancelled").select(col("key")), "key")
-            .withColumn("ts", current_timestamp()), s"$staged/cancelled", batchId)
-          IdempotentSink.writeBatch(cached.filter(col("route") === "good")
-            .select(col("key"), col("value")), s"$staged/good", batchId)
-        } finally cached.unpersist()
+          routed => IdempotentSink.writeBatch(graft.stream.CancellationWindow.perBatchDistinct(
+              routed.filter(col("route") === "cancelled").select(col("key")), "key")
+            .withColumn("ts", current_timestamp()), s"$staged/cancelled", batchId),
+          routed => IdempotentSink.writeBatch(routed.filter(col("route") === "good")
+            .select(col("key"), col("value")), s"$staged/good", batchId))
       }
       .option("checkpointLocation", s"$outDir/_checkpoints/route")
       .trigger(trigger))
+
+    // models + thresholds load once on the driver (ref :46-47) while the
+    // router drains; centers enter the plans as literals (broadcast with
+    // the plan). A failed load stops the router, so none is left running.
+    val (kmCenters, kmThreshold, bisCenters, bisThreshold) =
+      try (KMeansModel.load(kmDir).clusterCenters.map(_.toArray.toSeq).toSeq,
+        Persistence.loadThreshold(kmThr),
+        BisectingKMeansModel.load(bisDir).clusterCenters.map(_.toArray.toSeq).toSeq,
+        Persistence.loadThreshold(bisThr))
+      catch { case NonFatal(e) => qRoute.stop(); throw e }
     if (once) qRoute.awaitTermination() // drain before the consumers snapshot
 
     // F2 + A2 + A3: staged cancelled keys (already per-batch deduped) →
@@ -150,7 +173,14 @@ object Pipeline {
       .groupBy(window($"ts", "8 minutes", "1 minute"))
       .agg(count(lit(1)).as("n"))
       .select($"window.start".as("w_start"), $"n")
-    val qCancel = start(updateSink(cancelled, "cancelaciones"))
+    // no no-data micro-batches (captured at start()): in update mode the
+    // watermark's eviction emits no rows and late rows are dropped by the
+    // same watermark either way, so `cancelaciones` is unchanged; expired
+    // windows and dedup keys are evicted at the end of the next data
+    // batch instead of in an extra empty trigger after each one
+    val qCancel = StreamRunner.pinnedConf(spark,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(
+      start(updateSink(cancelled, "cancelaciones")))
 
     // F4 + P7 + A4 + F5 + P9: staged good lines → typed purchases → ONE
     // stateful invoice aggregate, scored against BOTH models in the same
@@ -163,13 +193,11 @@ object Pipeline {
       .writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = batch.cache()
-        try {
-          IdempotentSink.writeBatch(anomalies(cached, kmCenters, kmThreshold),
-            s"$outDir/anomalias_kmeans", batchId)
-          IdempotentSink.writeBatch(anomalies(cached, bisCenters, bisThreshold),
-            s"$outDir/anomalias_bisect_kmeans", batchId)
-        } finally cached.unpersist()
+        publish(batch)(
+          aggs => IdempotentSink.writeBatch(anomalies(aggs, kmCenters, kmThreshold),
+            s"$outDir/anomalias_kmeans", batchId),
+          aggs => IdempotentSink.writeBatch(anomalies(aggs, bisCenters, bisThreshold),
+            s"$outDir/anomalias_bisect_kmeans", batchId))
       }
       .option("checkpointLocation", s"$outDir/_checkpoints/anomalias")
       .trigger(trigger))

@@ -447,8 +447,7 @@ object StreamQueries {
       .write.mode("overwrite").parquet(s"$dimPath/v$v")
     (0L until nVersions).foreach(writeDim)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
-    graft.stream.StreamRunner.pinnedStatePartitions(s) {
-    val q = s.readStream.schema(raw)
+    val writer = s.readStream.schema(raw)
       .option("maxFilesPerTrigger", 1).parquet(scratch)
       .select($"event_id", $"user_id")
       .writeStream
@@ -465,9 +464,8 @@ object StreamQueries {
         graft.stream.IdempotentSink.writeBatch(
           batch.join(broadcast(dim), "user_id"), outPath, id)
       }
-      .start()
-    q.awaitTermination()
-    }
+    graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
+      .awaitTermination()
     graft.stream.IdempotentSink.read(s, outPath)
       .groupBy($"dim_version", $"tier")
       .agg(count(lit(1)).as("n_events"), countDistinct($"user_id").as("n_users"))
@@ -804,8 +802,7 @@ object StreamQueries {
         java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
         "asof-").toString
       graft.stream.StreamRunner.deleteOnExit(base)
-      graft.stream.StreamRunner.pinnedStatePartitions(s) {
-      val q = ev.writeStream
+      val writer = ev.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           graft.ops.TemporalJoins.asOfJoin(batch, latest,
               "user_id", "o_custkey", "ts", "o_orderdate")
@@ -814,9 +811,8 @@ object StreamQueries {
         .option("checkpointLocation",
           java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      }
+      graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
+        .awaitTermination()
       s.read.parquet(base)
         .select($"event_id", $"user_id", $"o_orderkey", $"o_totalprice")
         .orderBy($"event_id")
@@ -1057,8 +1053,7 @@ object StreamQueries {
       graft.stream.StreamRunner.deleteOnExit(outBase)
       val corruptByBatch =
         new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-      graft.stream.StreamRunner.pinnedStatePartitions(s) {
-      val q = stream.writeStream
+      val writer = stream.writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val cached = batch.cache()
           try {
@@ -1071,9 +1066,8 @@ object StreamQueries {
         .option("checkpointLocation",
           java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      }
+      graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
+        .awaitTermination()
       import scala.jdk.CollectionConverters._
       val nCorrupt = corruptByBatch.values.asScala.sum
       graft.stream.IdempotentSink.read(s, s"$outBase/clean")
@@ -1110,8 +1104,7 @@ object StreamQueries {
         "supsert-").toString
       graft.stream.StreamRunner.deleteOnExit(snapBase)
       val lastVersion = new java.util.concurrent.atomic.AtomicLong(-1L)
-      graft.stream.StreamRunner.pinnedStatePartitions(s) {
-      val q = replay.writeStream
+      val writer = replay.writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val delta = batch.groupBy(col("user_id"))
             .agg(count(lit(1)).as("n_events"),
@@ -1130,9 +1123,8 @@ object StreamQueries {
         .option("checkpointLocation",
           java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      }
+      graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
+        .awaitTermination()
       s.read.parquet(s"$snapBase/v${lastVersion.get()}")
         .select($"user_id", $"n_events",
           $"last.event_type".as("last_type"), $"last.value".as("last_value"))
@@ -2032,32 +2024,30 @@ object StreamQueries {
       }
       val v1AtCommit =
         new java.util.concurrent.atomic.AtomicReference[(Long, java.math.BigDecimal)]()
-      graft.stream.StreamRunner.pinnedStatePartitions(s) {
-        val q = replay.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val s2 = batch.sparkSession
-            val delta = batch
-              .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-              .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("sum_cents"))
-            // artifact-resolved predecessor through the repair-on-read
-            // path (see incrementalView) — restart- and race-safe
-            val prev = VersionedSnapshot.versionIds(s2, base)
-              .filter(_ < id).lastOption
-            val merged = prev.fold(delta)(p =>
-              VersionedSnapshot.read(s2, base, p)
-                .unionByName(delta)
-                .groupBy(col("day"), col("event_type"))
-                .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents")))
-            VersionedSnapshot.publish(merged, base, id)
-            if (id == 1L)
-              v1AtCommit.set(digest(VersionedSnapshot.read(s2, base, 1L)))
-          }
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val writer = replay.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val s2 = batch.sparkSession
+          val delta = batch
+            .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+            .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("sum_cents"))
+          // artifact-resolved predecessor through the repair-on-read
+          // path (see incrementalView) — restart- and race-safe
+          val prev = VersionedSnapshot.versionIds(s2, base)
+            .filter(_ < id).lastOption
+          val merged = prev.fold(delta)(p =>
+            VersionedSnapshot.read(s2, base, p)
+              .unionByName(delta)
+              .groupBy(col("day"), col("event_type"))
+              .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents")))
+          VersionedSnapshot.publish(merged, base, id)
+          if (id == 1L)
+            v1AtCommit.set(digest(VersionedSnapshot.read(s2, base, 1L)))
+        }
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
+        .awaitTermination()
       val ids = VersionedSnapshot.versionIds(s, base)
       val versionsOk = ids == Seq(0L, 1L, 2L, 3L)
       val asOf = VersionedSnapshot.readAt(s, base, 1L)
@@ -2409,8 +2399,7 @@ object StreamQueries {
       java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
       "ivm-").toString
     graft.stream.StreamRunner.deleteOnExit(viewBase)
-    graft.stream.StreamRunner.pinnedStatePartitions(s) {
-    val q = replay.writeStream
+    val writer = replay.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s2 = batch.sparkSession
         val delta = batch
@@ -2435,9 +2424,8 @@ object StreamQueries {
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    }
+    graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
+      .awaitTermination()
     val lastV = graft.stream.VersionedSnapshot.latestId(s, viewBase).getOrElse(
       sys.error(s"incremental-view replay published no versions under $viewBase"))
     val view = graft.stream.VersionedSnapshot.read(s, viewBase, lastV)

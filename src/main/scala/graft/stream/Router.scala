@@ -50,9 +50,8 @@ object Router {
     * (A2 — duplicate lines of one cancelled invoice collapse within each
     * micro-batch before publication, `InvoicePipeline.scala:68-71`).
     * Blocks until all input is processed. */
-  def runToSinks(records: DataFrame, baseDir: String, arity: Int = 8): Unit =
-    StreamRunner.pinnedStatePartitions(records.sparkSession) {
-    val q = classified(records, arity).writeStream
+  def runToSinks(records: DataFrame, baseDir: String, arity: Int = 8): Unit = {
+    val writer = classified(records, arity).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.cache()
         try {
@@ -75,8 +74,8 @@ object Router {
       }
       .option("checkpointLocation", s"$baseDir/_checkpoint")
       .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamRunner.pinnedStatePartitions(records.sparkSession)(writer.start())
+      .awaitTermination()
   }
 }
 

@@ -57,9 +57,9 @@ object StreamRunner {
     * SIDE EFFECT, by construction: the pin mutates the SESSION-GLOBAL
     * conf for the duration of `body`, so (a) any concurrent batch query
     * on the same session during that window runs with `partitions`
-    * shuffle partitions — keep `body` down to the `start()` call where
-    * possible (the pattern [[toMemoryWithQuery]]
-    * uses: start inside the pin, await outside it), and (b) batch work
+    * shuffle partitions — keep `body` down to the `start()` call (start
+    * inside the pin, await outside it; `GraftSessionSpec` fails on a pin
+    * that wraps an await), and (b) batch work
     * inside `foreachBatch` bodies inherits the pin for the query's whole
     * lifetime via the streaming session cloned at `start()` — restoring
     * the outer conf cannot reach that clone. (b) is usually right (a
@@ -68,10 +68,20 @@ object StreamRunner {
     * `batch.sparkSession` — that is the cloned session — to reclaim
     * batch-side parallelism. */
   def pinnedStatePartitions[T](spark: org.apache.spark.sql.SparkSession,
-                               partitions: Int = StatePartitions)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
+                               partitions: Int = StatePartitions)(body: => T): T =
+    pinnedConf(spark, "spark.sql.shuffle.partitions" -> partitions.toString)(body)
+
+  /** Run `body` with the session conf `key` set to `value`, then restore
+    * the prior setting — the general form of [[pinnedStatePartitions]],
+    * with the same session-global side effect, for the other settings a
+    * stream captures at `start()` (e.g.
+    * `spark.sql.streaming.noDataMicroBatches.enabled`). Keep `body` down
+    * to the `start()` call. */
+  def pinnedConf[T](spark: org.apache.spark.sql.SparkSession, setting: (String, String))(
+      body: => T): T = {
+    val (key, value) = setting
     val prior = spark.conf.getOption(key)
-    spark.conf.set(key, partitions.toString)
+    spark.conf.set(key, value)
     try body
     finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }

@@ -119,16 +119,16 @@ class AppsSpec extends SparkSuite {
     assert(a == b, "curation is not replay-deterministic")
   }
 
-  test("train job + online pipeline end-to-end over the artifact contract") {
+  /** Both models trained by `Train.run` on sf0.001, and kafka-shaped
+    * records for the pipeline from the same data, under one directory;
+    * shared by the Pipeline tests. */
+  private lazy val artifacts = {
     val s = spark
     import s.implicits._
     val base = java.nio.file.Files.createTempDirectory("apps-spec-").toString
-
     // offline: train both models from the same data the pipeline will see
-    val (kKm, thrKm) = Train.run(s, sf, s"$base/model_km", s"$base/thr_km.txt", "kmeans")
-    val (kBis, thrBis) = Train.run(s, sf, s"$base/model_bis", s"$base/thr_bis.txt", "bisecting")
-    assert(kKm >= 2 && kBis >= 2)
-    assert(thrKm > 0 && thrBis > 0)
+    val km = Train.run(s, sf, s"$base/model_km", s"$base/thr_km.txt", "kmeans")
+    val bis = Train.run(s, sf, s"$base/model_bis", s"$base/thr_bis.txt", "bisecting")
 
     // kafka-shaped records synthesized from lineitem×orders: key =
     // invoice id (C-prefixed for every 7th), value = 8-field CSV line in
@@ -150,31 +150,23 @@ class AppsSpec extends SparkSuite {
         $"l_orderkey".cast("string")).as("key"),
       value.as("value"))
     records.write.mode("overwrite").parquet(s"$base/records")
+    (base, km, bis)
+  }
 
-    // online: one AvailableNow pass through all four branches. outDir is
-    // given as a `file:` URI: every directory must be made through the
-    // Hadoop FileSystem, so no local `file:` tree appears under the cwd
-    val shufflePartitions = s.conf.get("spark.sql.shuffle.partitions")
-    val queries = Pipeline.run(s, s"$base/records", s"$base/model_km",
-      s"$base/thr_km.txt", s"$base/model_bis", s"$base/thr_bis.txt",
-      s"file:$base/out", once = true)
-    queries.foreach(_.awaitTermination())
-    assert(!new java.io.File(s"file:$base").exists(),
-      "a directory was made with java.io.File instead of outDir's FileSystem")
+  private def runPipeline(outDir: String) = {
+    val (base, _, _) = artifacts
+    Pipeline.run(spark, s"$base/records", s"$base/model_km", s"$base/thr_km.txt",
+      s"$base/model_bis", s"$base/thr_bis.txt", outDir, once = true)
+  }
 
-    // one state partition per stateful operator, pinned only around each
-    // start(): the session's batch setting is the same after run
-    assert(s.conf.get("spark.sql.shuffle.partitions") == shufflePartitions)
-    val Seq(_, qCancel, qAnomalies) = queries
-    Seq("cancel" -> qCancel, "anomaly" -> qAnomalies).foreach { case (name, q) =>
-      val parts = q.recentProgress.flatMap(_.stateOperators).map(_.numShufflePartitions).toSeq
-      assert(parts.nonEmpty && parts.forall(_ == 1L),
-        s"$name query state partitions $parts, expected 1 per operator")
-    }
-
-    // every sink equals its batch twin over the records the pipeline read
+  /** Every sink under `out` equals its batch twin over the records the
+    * pipeline read, with exactly one copy of each row. */
+  private def assertSinksEqualTwin(out: String): Unit = {
+    val s = spark
+    import s.implicits._
+    val (base, _, _) = artifacts
     val routed = graft.stream.Router.classified(s.read.parquet(s"$base/records"))
-    def sink(name: String) = graft.stream.IdempotentSink.read(s, s"$base/out/$name")
+    def sink(name: String) = graft.stream.IdempotentSink.read(s, s"$out/$name")
     val invalid = sink("facturas_erroneas")
     assert(invalid.count() > 0, "invalid route must fire")
     assert(graft.ops.Multiset.equal(invalid,
@@ -207,6 +199,72 @@ class AppsSpec extends SparkSuite {
           Pipeline.anomalies(aggs, centers, graft.ml.Persistence.loadThreshold(thr))),
           s"$name differs from the batch twin")
     }
+  }
+
+  test("train job + online pipeline end-to-end over the artifact contract") {
+    val s = spark
+    val (base, (kKm, thrKm), (kBis, thrBis)) = artifacts
+    assert(kKm >= 2 && kBis >= 2)
+    assert(thrKm > 0 && thrBis > 0)
+
+    // online: one AvailableNow pass through all four branches. outDir is
+    // given as a `file:` URI: every directory must be made through the
+    // Hadoop FileSystem, so no local `file:` tree appears under the cwd
+    val shufflePartitions = s.conf.get("spark.sql.shuffle.partitions")
+    val queries = runPipeline(s"file:$base/out")
+    queries.foreach(_.awaitTermination())
+    assert(!new java.io.File(s"file:$base").exists(),
+      "a directory was made with java.io.File instead of outDir's FileSystem")
+
+    // one state partition per stateful operator, pinned only around each
+    // start(): the session's batch setting is the same after run
+    assert(s.conf.get("spark.sql.shuffle.partitions") == shufflePartitions)
+    val Seq(_, qCancel, qAnomalies) = queries
+    Seq("cancel" -> qCancel, "anomaly" -> qAnomalies).foreach { case (name, q) =>
+      val parts = q.recentProgress.flatMap(_.stateOperators).map(_.numShufflePartitions).toSeq
+      assert(parts.nonEmpty && parts.forall(_ == 1L),
+        s"$name query state partitions $parts, expected 1 per operator")
+    }
+    // the cancel query runs no empty (no-data) trigger
+    val cancelRows = qCancel.recentProgress.map(_.numInputRows).toSeq
+    assert(cancelRows.nonEmpty && cancelRows.forall(_ > 0),
+      s"cancel query triggers read $cancelRows rows, expected > 0 in each")
+
+    assertSinksEqualTwin(s"$base/out")
+  }
+
+  test("pipeline: a failed publish fails the router, and a rerun leaves exactly one copy") {
+    val out = java.nio.file.Files.createTempDirectory("failed-publish-").toString
+    // a plain file where the invalid-route sink stages its batches: that
+    // writer fails, and its two siblings still publish batch 0 before the
+    // batch fails (the concurrent fan-out awaits every writer)
+    val blocker = new java.io.File(s"$out/facturas_erroneas/_staging")
+    assert(blocker.getParentFile.mkdirs() && blocker.createNewFile())
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](runPipeline(out))
+    assert(new java.io.File(s"$out/_staged/cancelled/b0").isDirectory &&
+      new java.io.File(s"$out/_staged/good/b0").isDirectory,
+      "the failing writer's siblings must have published before the batch failed")
+    assert(!new java.io.File(s"$out/facturas_erroneas/b0").exists())
+
+    // the retry of batch 0 on the same checkpoints republishes nothing the
+    // first attempt committed and publishes the rest
+    assert(blocker.delete())
+    runPipeline(out).foreach(_.awaitTermination())
+    assertSinksEqualTwin(out)
+  }
+
+  test("pipeline: a failed model load stops the router it started") {
+    val s = spark
+    val base = java.nio.file.Files.createTempDirectory("failed-load-").toString
+    assert(new java.io.File(s"$base/records").mkdirs())
+    // continuous mode: the router would trigger forever if left running
+    try {
+      intercept[Exception](Pipeline.run(s, s"$base/records", s"$base/no_model",
+        s"$base/no_thr.txt", s"$base/no_model", s"$base/no_thr.txt", s"$base/out",
+        once = false))
+      assert(s.streams.active.isEmpty,
+        s"queries left running: ${s.streams.active.map(_.id).mkString(",")}")
+    } finally s.streams.active.foreach(_.stop())
   }
 
   test("train job: k, threshold and centers do not depend on the shuffle partition count") {

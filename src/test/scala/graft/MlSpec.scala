@@ -57,6 +57,17 @@ class MlSpec extends SparkSuite {
     assert(Persistence.loadThreshold(p) == 123.456)
   }
 
+  test("threshold artifact round-trips through a file: URI on its Hadoop FileSystem") {
+    val dir = java.nio.file.Files.createTempDirectory("thr-uri-").toString
+    val uri = s"file:$dir/model/threshold.txt"
+    Persistence.saveThreshold(uri, 0.1 + 0.2) // a double with no short decimal form
+    assert(Persistence.loadThreshold(uri) == 0.1 + 0.2)
+    assert(new java.io.File(s"$dir/model/threshold.txt").isFile,
+      "the threshold must land at the URI's path")
+    assert(!new java.io.File(s"file:$dir").exists(),
+      "a local `file:` tree was made instead of writing through the URI's FileSystem")
+  }
+
   test("model store: train→save→load→score, memoized per key") {
     val s = spark
     import s.implicits._
