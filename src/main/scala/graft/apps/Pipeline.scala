@@ -104,10 +104,9 @@ object Pipeline {
     // every query starts on ONE state partition (one store per stateful
     // operator, so one commit per operator per trigger; why 1, and why
     // changing it needs a new checkpoint: StreamRunner.StatePartitions).
-    // The count is captured at start(), so the session-global pin wraps
-    // start() alone — never the model loads or an await.
-    def start(writer: DataStreamWriter[Row]): StreamingQuery =
-      StreamRunner.pinnedStatePartitions(spark, partitions = 1)(writer.start())
+    def start(writer: DataStreamWriter[Row],
+              conf: Map[String, String] = Map.empty): StreamingQuery =
+      StreamRunner.start(spark, writer, partitions = 1, conf)
     val trigger = if (once) Trigger.AvailableNow() else Trigger.ProcessingTime("20 seconds")
     // update-mode branches (stateful operators re-emit on update) cannot
     // use the append-only file sink directly — write each update batch
@@ -178,9 +177,8 @@ object Pipeline {
     // same watermark either way, so `cancelaciones` is unchanged; expired
     // windows and dedup keys are evicted at the end of the next data
     // batch instead of in an extra empty trigger after each one
-    val qCancel = StreamRunner.pinnedConf(spark,
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(
-      start(updateSink(cancelled, "cancelaciones")))
+    val qCancel = start(updateSink(cancelled, "cancelaciones"),
+      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
 
     // F4 + P7 + A4 + F5 + P9: staged good lines → typed purchases → ONE
     // stateful invoice aggregate, scored against BOTH models in the same

@@ -73,16 +73,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), jaccard(col("sa"), col("sb")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
 
-  /** All unordered pairs of a (sorted) array: `(xs[i], xs[j])` for i<j —
-    * codegen'd higher-order functions, no join. Memory note: callers must
-    * NOT flatten this over a whole bucket in one value — see
-    * [[bucketPairs]], which streams pairs through two chained generators
-    * instead, because a flattened B²/2-pair array with vector payloads is
-    * hundreds of MB in a single row (the r18 16× OOM). */
-  private def arrayPairs(xs: Column): Column =
-    flatten(transform(xs, (x, i) =>
-      transform(slice(xs, i + 2, size(xs)), y => struct(x.as("a"), y.as("b")))))
-
   /** Candidate pairs from bucket membership — the shared LSH skeleton:
     * group rows by bucket, drop buckets larger than `maxBucket` (the skew
     * guard: one boilerplate-heavy bucket would otherwise go quadratic),

@@ -328,10 +328,7 @@ object IngestQueries {
       import s.implicits._
       val docs = Tables.documents(s, dir)
         .select($"doc_id", $"source", $"n_chars".cast("long").as("n_chars"))
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "sinkcompact-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = graft.stream.StreamRunner.scratchDir("sinkcompact-")
       val sink = s"$base/docs"
       def part(i: Int) = docs.filter($"doc_id" % 3 === i)
       (0 until 3).foreach(i =>
@@ -379,10 +376,7 @@ object IngestQueries {
     "cs17_schema_evolution" -> { (s, dir) =>
       import s.implicits._
       val orders = Tables.orders(s, dir)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "schemaevo-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = graft.stream.StreamRunner.scratchDir("schemaevo-")
       val sink = s"$base/orders"
       def slice(i: Int) = orders.filter($"o_orderkey" % 3 === i)
       graft.stream.IdempotentSink.writeBatch(

@@ -901,10 +901,7 @@ object PipelineQueries {
       val key = s"emb-$dir"
       val centers = Similarity.coarseQuantizer(emb, "vec_id", "embedding",
         key, 16, 42L)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "anntomb-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = graft.stream.StreamRunner.scratchDir("anntomb-")
       val aDir = s"$base/postings"
       // cell-routed posting-list ingest, three id-sliced batches; the
       // route is a STRING copy of the payload cell (partitionBy strips
@@ -1298,10 +1295,7 @@ object PipelineQueries {
     "dd20_band_index_compaction" -> { (s, dir) =>
       import s.implicits._
       val docs = Tables.documents(s, dir).select($"doc_id", $"text")
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "bandcompact-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = graft.stream.StreamRunner.scratchDir("bandcompact-")
       val bandsDir = s"$base/bands"
       // ONE shingle+signature pass over the corpus serves all four band
       // consumers (3 batch writes + the post-fold redelivery, whose
@@ -1381,10 +1375,7 @@ object PipelineQueries {
       val docs = Tables.documents(s, dir).select($"doc_id", $"text", $"n_chars")
       val hist = docs.filter(!($"doc_id" % 4 === 3))
       val batch = docs.filter($"doc_id" % 4 === 3)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "tombidx-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = graft.stream.StreamRunner.scratchDir("tombidx-")
       val bandsDir = s"$base/bands"
       // ONE shingle+signature pass over history serves all three batch
       // writes (the dd20/dd12 treatment: band rows are a pure per-doc

@@ -424,10 +424,7 @@ object StreamQueries {
       case f if f.name == "ts" => f.copy(dataType = org.apache.spark.sql.types.LongType)
       case f => f
     })
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-      "dimref-").toString
-    graft.stream.StreamRunner.deleteOnExit(base)
+    val base = StreamRunner.scratchDir("dimref-")
     val dimPath = s"$base/dim"
     val outPath = s"$base/out"
     val users = Tables.events(s, dir).select($"user_id").distinct()
@@ -446,7 +443,7 @@ object StreamQueries {
         lit(v).as("dim_version"))
       .write.mode("overwrite").parquet(s"$dimPath/v$v")
     (0L until nVersions).foreach(writeDim)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
+    val ckpt = StreamRunner.scratchDir("ckpt-")
     val writer = s.readStream.schema(raw)
       .option("maxFilesPerTrigger", 1).parquet(scratch)
       .select($"event_id", $"user_id")
@@ -464,8 +461,7 @@ object StreamQueries {
         graft.stream.IdempotentSink.writeBatch(
           batch.join(broadcast(dim), "user_id"), outPath, id)
       }
-    graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
-      .awaitTermination()
+    StreamRunner.start(s, writer).awaitTermination()
     graft.stream.IdempotentSink.read(s, outPath)
       .groupBy($"dim_version", $"tier")
       .agg(count(lit(1)).as("n_events"), countDistinct($"user_id").as("n_users"))
@@ -506,20 +502,16 @@ object StreamQueries {
     val scratch = ensureStreamChunks(s, dir, nFiles)
     val needed = Seq("l_orderkey", "l_quantity", "l_extendedprice")
     val schema = StructType(Schemas.lineitem.filter(f => needed.contains(f.name)))
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-      "crash-").toString
-    graft.stream.StreamRunner.deleteOnExit(base)
+    val base = StreamRunner.scratchDir("crash-")
     val sinkDir = s"$base/sink"
     val ckpt = s"$base/ckpt"
     val crashPending = new java.util.concurrent.atomic.AtomicBoolean(true)
-    def run(): org.apache.spark.sql.streaming.StreamingQuery =
-        graft.stream.StreamRunner.pinnedStatePartitions(s) {
+    def run(): org.apache.spark.sql.streaming.StreamingQuery = {
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(scratch)
       val lines = purchaseLines(
         stream.join(broadcast(Tables.orders(s, dir)), $"l_orderkey" === $"o_orderkey"), s)
-      InvoiceStateMachine(lines, idleTimeoutMs = 0L).toDF()
+      StreamRunner.start(s, InvoiceStateMachine(lines, idleTimeoutMs = 0L).toDF()
         .writeStream
         .outputMode("update")
         .option("checkpointLocation", ckpt)
@@ -531,8 +523,7 @@ object StreamQueries {
           // output — the exact failure the idempotent protocol exists for
           if (batchId >= 1 && crashPending.getAndSet(false))
             throw new RuntimeException("graft: injected crash between sink write and commit")
-        }
-        .start()
+        })
     }
     val q1 = run()
     val run1Failed =
@@ -673,10 +664,7 @@ object StreamQueries {
     // foreachBatch; the query output is the union read back from disk.
     "st03_routing" -> { (s, dir) =>
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "router-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("router-")
       val stream = StreamRunner.asStream(kafkaShapedOrders(Tables.orders(s, dir)))
       Router.runToSinks(stream, base)
       Router.Routes.map { r =>
@@ -798,21 +786,16 @@ object StreamQueries {
           max_by($"o_totalprice", $"o_orderkey").as("o_totalprice"))
       val ev = StreamSources.eventsStream(s, dir)
         .select($"event_id", $"user_id", $"ts")
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "asof-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("asof-")
       val writer = ev.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           graft.ops.TemporalJoins.asOfJoin(batch, latest,
               "user_id", "o_custkey", "ts", "o_orderdate")
             .write.mode("append").parquet(base)
         }
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+        .option("checkpointLocation", StreamRunner.scratchDir("ckpt-"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
-        .awaitTermination()
+      StreamRunner.start(s, writer).awaitTermination()
       s.read.parquet(base)
         .select($"event_id", $"user_id", $"o_orderkey", $"o_totalprice")
         .orderBy($"event_id")
@@ -1047,10 +1030,7 @@ object StreamQueries {
         .option("columnNameOfCorruptRecord", "_bad")
         .option("maxFilesPerTrigger", 1)
         .csv(scratch)
-      val outBase = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "squarantine-").toString
-      graft.stream.StreamRunner.deleteOnExit(outBase)
+      val outBase = StreamRunner.scratchDir("squarantine-")
       val corruptByBatch =
         new java.util.concurrent.ConcurrentHashMap[Long, Long]()
       val writer = stream.writeStream
@@ -1063,11 +1043,9 @@ object StreamQueries {
               s"$outBase/clean", id)
           } finally cached.unpersist()
         }
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+        .option("checkpointLocation", StreamRunner.scratchDir("ckpt-"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
-        .awaitTermination()
+      StreamRunner.start(s, writer).awaitTermination()
       import scala.jdk.CollectionConverters._
       val nCorrupt = corruptByBatch.values.asScala.sum
       graft.stream.IdempotentSink.read(s, s"$outBase/clean")
@@ -1099,10 +1077,7 @@ object StreamQueries {
       })
       val replay = s.readStream.schema(raw)
         .option("maxFilesPerTrigger", 1).parquet(scratch)
-      val snapBase = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "supsert-").toString
-      graft.stream.StreamRunner.deleteOnExit(snapBase)
+      val snapBase = StreamRunner.scratchDir("supsert-")
       val lastVersion = new java.util.concurrent.atomic.AtomicLong(-1L)
       val writer = replay.writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -1120,11 +1095,9 @@ object StreamQueries {
           graft.stream.VersionedSnapshot.publish(merged, snapBase, id)
           lastVersion.set(id)
         }
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+        .option("checkpointLocation", StreamRunner.scratchDir("ckpt-"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
-        .awaitTermination()
+      StreamRunner.start(s, writer).awaitTermination()
       s.read.parquet(s"$snapBase/v${lastVersion.get()}")
         .select($"user_id", $"n_events",
           $"last.event_type".as("last_type"), $"last.value".as("last_value"))
@@ -1381,10 +1354,7 @@ object StreamQueries {
     "st29_stream_lsh_dedup" -> { (s, dir) =>
       import s.implicits._
       val scratch = ensureDocChunks(s, dir, 3)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "lshstream-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("lshstream-")
       runLshDedupStream(s, scratch, base): Unit
       graft.stream.IdempotentSink.read(s, s"$base/keepers")
         .select($"doc_id", $"n_chars")
@@ -1407,10 +1377,7 @@ object StreamQueries {
     "st37_stream_lsh_compacting" -> { (s, dir) =>
       import s.implicits._
       val scratch = ensureDocChunks(s, dir, 3)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "lshcomp-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("lshcomp-")
       val folds = runLshDedupStream(s, scratch, base, maxHot = Some(1))
       def ls(p: String) = Option(new java.io.File(p).listFiles())
         .getOrElse(Array.empty[java.io.File]).filter(_.isDirectory)
@@ -1460,10 +1427,7 @@ object StreamQueries {
     "st39_stream_tombstone_takedown" -> { (s, dir) =>
       import s.implicits._
       val scratch = ensureDocChunks(s, dir, 3)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "lshtomb-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("lshtomb-")
       val tombDir = s"$base/tombstones"
       def writeTombstones(s2: org.apache.spark.sql.SparkSession): Unit = {
         val d = Tables.documents(s2, dir)
@@ -1532,10 +1496,7 @@ object StreamQueries {
       val key = s"emb-$dir"
       val centers = graft.ops.Similarity.coarseQuantizer(
         emb, "vec_id", "embedding", key, nCells = 16, seed = 42L)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "annstream-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("annstream-")
       val sinkDir = s"$base/topk"
       // the one-time index write (the an12 artifact posture)
       graft.ops.Similarity.ivfAssignments(emb, "vec_id", "embedding", centers)
@@ -1631,10 +1592,7 @@ object StreamQueries {
       val emb = Tables.embeddings(s, dir)
       val centers = graft.ops.Similarity.coarseQuantizer(
         emb, "vec_id", "embedding", s"emb-$dir", nCells = 16, seed = 42L)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "annindex-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("annindex-")
       val idxDir = s"$base/assignments"
       val scratch = ensureEmbChunks(s, dir, 3)
       val stream = s.readStream.schema(Schemas.embeddings)
@@ -1718,10 +1676,7 @@ object StreamQueries {
       val (m, ksub) = (16, 16)
       val books = graft.ops.Similarity.pqCodebooks(
         emb, "vec_id", "embedding", s"emb-$dir", m, ksub, 42L)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "pqingest-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("pqingest-")
       val codesDir = s"$base/pq_codes"
       val scratch = ensureEmbChunks(s, dir, 3)
       val stream = s.readStream.schema(Schemas.embeddings)
@@ -1814,10 +1769,7 @@ object StreamQueries {
       val cells = graft.ops.Similarity.autoCells(emb, SemDedupMaxCell, key)
       val centers = graft.ops.Similarity.coarseQuantizer(
         emb, "vec_id", "embedding", key, cells, seed = 42L)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "semdedup-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("semdedup-")
       runSemanticDedupStream(s, ensureEmbChunks(s, dir, 3), base, centers)
       val streamedKeepers = graft.stream.IdempotentSink
         .read(s, s"$base/keepers").select($"vec_id").cutLineage()
@@ -1903,10 +1855,7 @@ object StreamQueries {
       import s.implicits._
       val K = 5
       val scratch = ensureDocChunks(s, dir, 3)
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "ksample-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("ksample-")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source")).orderBy(col("h"), col("doc_id"))
       def topK(df: DataFrame) = df
@@ -2012,10 +1961,7 @@ object StreamQueries {
       val replay = s.readStream.schema(raw)
         .option("maxFilesPerTrigger", 1).parquet(scratch)
         .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "ttravel-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("ttravel-")
       def digest(df: DataFrame): (Long, java.math.BigDecimal) = {
         val r = df.agg(count(lit(1)),
           sum(xxhash64(struct(df.columns.map(col): _*))
@@ -2043,11 +1989,9 @@ object StreamQueries {
           if (id == 1L)
             v1AtCommit.set(digest(VersionedSnapshot.read(s2, base, 1L)))
         }
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+        .option("checkpointLocation", StreamRunner.scratchDir("ckpt-"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
-        .awaitTermination()
+      StreamRunner.start(s, writer).awaitTermination()
       val ids = VersionedSnapshot.versionIds(s, base)
       val versionsOk = ids == Seq(0L, 1L, 2L, 3L)
       val asOf = VersionedSnapshot.readAt(s, base, 1L)
@@ -2080,10 +2024,7 @@ object StreamQueries {
     "st41_snapshot_changes" -> { (s, dir) =>
       import s.implicits._
       import graft.stream.VersionedSnapshot
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "snapcdc-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("snapcdc-")
       val (vbase, lastV) = sourceAggSnapshots(s, dir, base)
       // the genesis edge: changes from the empty artifact are exactly
       // the latest snapshot, all tagged insert (three bounded counts)
@@ -2136,10 +2077,7 @@ object StreamQueries {
     "st42_cdc_incremental_view" -> { (s, dir) =>
       import s.implicits._
       import graft.stream.VersionedSnapshot
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "cdcivm-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("cdcivm-")
       val (vbase, lastV) = sourceAggSnapshots(s, dir, base)
       val dbase = s"$base/downstream"
       def groupKey(c: org.apache.spark.sql.Column) =
@@ -2224,10 +2162,7 @@ object StreamQueries {
     "st43_cdc_join_view" -> { (s, dir) =>
       import s.implicits._
       import graft.stream.VersionedSnapshot
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-        "cdcjoin-").toString
-      graft.stream.StreamRunner.deleteOnExit(base)
+      val base = StreamRunner.scratchDir("cdcjoin-")
       val (abase, lastV) = sourceAggSnapshots(s, dir, base)
       val ids = VersionedSnapshot.versionIds(s, abase)
       // the oracle pins tier = (key + lastV) % 3 and n_versions = 3; a
@@ -2395,10 +2330,7 @@ object StreamQueries {
     val replay = s.readStream.schema(raw)
       .option("maxFilesPerTrigger", 1).parquet(scratch)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val viewBase = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(new java.io.File("target").getAbsolutePath),
-      "ivm-").toString
-    graft.stream.StreamRunner.deleteOnExit(viewBase)
+    val viewBase = StreamRunner.scratchDir("ivm-")
     val writer = replay.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s2 = batch.sparkSession
@@ -2421,11 +2353,9 @@ object StreamQueries {
         retainKeep.foreach(k =>
           graft.stream.VersionedSnapshot.retain(s2, viewBase, k))
       }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+      .option("checkpointLocation", StreamRunner.scratchDir("ckpt-"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    graft.stream.StreamRunner.pinnedStatePartitions(s)(writer.start())
-      .awaitTermination()
+    StreamRunner.start(s, writer).awaitTermination()
     val lastV = graft.stream.VersionedSnapshot.latestId(s, viewBase).getOrElse(
       sys.error(s"incremental-view replay published no versions under $viewBase"))
     val view = graft.stream.VersionedSnapshot.read(s, viewBase, lastV)

@@ -74,8 +74,7 @@ object Router {
       }
       .option("checkpointLocation", s"$baseDir/_checkpoint")
       .trigger(Trigger.AvailableNow())
-    StreamRunner.pinnedStatePartitions(records.sparkSession)(writer.start())
-      .awaitTermination()
+    StreamRunner.start(records.sparkSession, writer).awaitTermination()
   }
 }
 

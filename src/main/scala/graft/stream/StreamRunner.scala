@@ -1,10 +1,10 @@
 package graft.stream
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Harness that runs a finite streaming plan to completion and hands back
   * its output as a batch DataFrame — the bridge that lets streaming
@@ -17,8 +17,12 @@ import org.apache.spark.sql.streaming.Trigger
   * answer. (Multi-batch semantics — re-emission per update, state timeout —
   * are pinned separately in StreamSpec, where batch boundaries are
   * explicit `MemoryStream.addData` calls.) The memory sink is a test/
-  * verification harness by design; production sinks are Kafka/files via
-  * [[Router.runToSinks]].
+  * verification harness by design; the production sinks are the
+  * idempotent file sinks of [[graft.apps.Pipeline]].
+  *
+  * Every stream in the library starts through [[start]], which pins the
+  * settings a query captures at `start()`, and takes its scratch space
+  * from [[scratchDir]].
   */
 object StreamRunner {
 
@@ -47,19 +51,19 @@ object StreamRunner {
     * checkpoint. */
   val StatePartitions = 8
 
-  /** Run `body` — which must START its streaming queries inside (the
-    * partition count is captured at `start()`) — with
-    * `spark.sql.shuffle.partitions` pinned to `partitions` (default
-    * [[StatePartitions]]), then restore the session's batch setting.
-    * Queries may keep running after restore (continuous mode): the
-    * captured value rides the checkpoint.
+  /** Start `writer` with `spark.sql.shuffle.partitions` pinned to
+    * `partitions` (default [[StatePartitions]]) and every `conf` entry set
+    * — the settings a stream captures at `start()`, e.g.
+    * `spark.sql.streaming.noDataMicroBatches.enabled` — then restore the
+    * session's prior values and return the query. The query keeps running
+    * after the restore (continuous mode): the captured values ride its
+    * cloned session and the checkpoint.
     *
     * SIDE EFFECT, by construction: the pin mutates the SESSION-GLOBAL
-    * conf for the duration of `body`, so (a) any concurrent batch query
-    * on the same session during that window runs with `partitions`
-    * shuffle partitions — keep `body` down to the `start()` call (start
-    * inside the pin, await outside it; `GraftSessionSpec` fails on a pin
-    * that wraps an await), and (b) batch work
+    * conf, so (a) any concurrent batch query on the same session runs
+    * with the pinned values while `writer.start()` runs — the signature
+    * keeps that window down to `start()` alone, as no caller-supplied
+    * body (an await, a model load) can run inside it — and (b) batch work
     * inside `foreachBatch` bodies inherits the pin for the query's whole
     * lifetime via the streaming session cloned at `start()` — restoring
     * the outer conf cannot reach that clone. (b) is usually right (a
@@ -67,23 +71,33 @@ object StreamRunner {
     * aggregation should set `spark.sql.shuffle.partitions` explicitly on
     * `batch.sparkSession` — that is the cloned session — to reclaim
     * batch-side parallelism. */
-  def pinnedStatePartitions[T](spark: org.apache.spark.sql.SparkSession,
-                               partitions: Int = StatePartitions)(body: => T): T =
-    pinnedConf(spark, "spark.sql.shuffle.partitions" -> partitions.toString)(body)
+  def start[T](spark: SparkSession, writer: DataStreamWriter[T],
+               partitions: Int = StatePartitions,
+               conf: Map[String, String] = Map.empty): StreamingQuery = {
+    val pins = conf + ("spark.sql.shuffle.partitions" -> partitions.toString)
+    val prior = pins.keys.map(key => key -> spark.conf.getOption(key))
+    pins.foreach { case (key, value) => spark.conf.set(key, value) }
+    try writer.start()
+    finally prior.foreach { case (key, value) =>
+      value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
 
-  /** Run `body` with the session conf `key` set to `value`, then restore
-    * the prior setting — the general form of [[pinnedStatePartitions]],
-    * with the same session-global side effect, for the other settings a
-    * stream captures at `start()` (e.g.
-    * `spark.sql.streaming.noDataMicroBatches.enabled`). Keep `body` down
-    * to the `start()` call. */
-  def pinnedConf[T](spark: org.apache.spark.sql.SparkSession, setting: (String, String))(
-      body: => T): T = {
-    val (key, value) = setting
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  /** A fresh scratch directory `target/stream-scratch/<prefix>…` — the
+    * one place streams get scratch space for inputs, sinks and
+    * checkpoints (`GraftSessionSpec` keeps it that way), so none is left
+    * in the system temp dir. Scratch inputs must outlive the stream
+    * returned by [[asStream]] (readers list the dir per trigger), and
+    * foreachBatch sink dirs the lazy DataFrame returned over them, so
+    * every dir is deleted at JVM exit instead of eagerly, by one shutdown
+    * hook over every registered dir (a hook per call would pile up for as
+    * long as the session lives). */
+  def scratchDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(
+      Files.createDirectories(Paths.get("target/stream-scratch").toAbsolutePath), prefix).toString
+    exitHook
+    exitDirs.add(dir)
+    dir
   }
 
   /** Turn a batch DataFrame into a genuine file-backed stream: materialize
@@ -91,12 +105,8 @@ object StreamRunner {
     * open a file streaming source over it. Used to feed synthesized
     * record sets through streaming plans. */
   def asStream(df: DataFrame): DataFrame = {
-    val dir = Files.createTempDirectory(
-      Files.createDirectories(java.nio.file.Paths.get(
-        new java.io.File("target/stream-scratch").getAbsolutePath)),
-      "in-").toString
+    val dir = scratchDir("in-")
     df.write.mode("overwrite").parquet(dir)
-    deleteOnExit(dir)
     df.sparkSession.readStream.schema(df.schema).parquet(dir)
   }
 
@@ -111,40 +121,23 @@ object StreamRunner {
     * callers can inspect its progress — e.g. assert how many micro-batches
     * a chunked replay actually crossed (`lastProgress.batchId`). */
   def toMemoryWithQuery[T](ds: Dataset[T], mode: String = "update")
-      : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
+      : (DataFrame, StreamingQuery) = {
     val spark = ds.sparkSession
     val sink = "graft_sink_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    // pin only around start(): the partition count is captured into the
-    // cloned streaming session there, and awaiting OUTSIDE the pin keeps
-    // the session-global conf mutation to milliseconds instead of the
-    // stream's whole runtime (no concurrent batch query ever sees it)
-    val q = pinnedStatePartitions(spark) {
-      ds.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
+    val ckpt = scratchDir("ckpt-")
+    val q = start(spark, ds.writeStream
+      .outputMode(mode)
+      .format("memory")
+      .queryName(sink)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()))
     q.awaitTermination()
     // the memory-sink table is complete and the query is terminated: its
-    // checkpoint has no further use — delete it rather than leaking one
-    // tree per invocation into the temp dir
+    // checkpoint has no further use — delete it now rather than letting
+    // one tree per invocation pile up until exit
     deleteRecursively(new java.io.File(ckpt))
+    exitDirs.remove(ckpt): Unit
     (spark.table(sink), q)
-  }
-
-  /** Scratch inputs created by [[asStream]] must outlive the returned
-    * stream (readers list the dir per trigger) — and foreachBatch sink
-    * dirs must outlive the lazy DataFrame returned over them — so they
-    * are deleted at JVM exit instead of eagerly, by one shutdown hook
-    * over every registered dir (a hook per call would pile up for as
-    * long as the session lives). */
-  private[graft] def deleteOnExit(dir: String): Unit = {
-    exitHook
-    exitDirs.add(dir): Unit
   }
 
   private val exitDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

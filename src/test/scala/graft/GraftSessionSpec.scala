@@ -7,65 +7,39 @@ import scala.jdk.CollectionConverters._
 
 /** The session policy lives in one place: [[GraftSession]] is the only
   * SparkSession builder under `src/`, and the suite runs under exactly
-  * the settings that ship. */
+  * the settings that ship. The scratch policy too: streams take their
+  * scratch directories from [[graft.stream.StreamRunner.scratchDir]]. */
 class GraftSessionSpec extends SparkSuite {
 
-  test("GraftSession is the only SparkSession builder under src/") {
-    // split so this file does not match itself
-    val needle = "SparkSession" + ".builder"
-    val walk = Files.walk(Paths.get("src"))
-    val hits = try walk.iterator().asScala
+  /** The files under `root` whose text contains `needle`, sorted. */
+  private def filesContaining(root: String, needle: String): List[String] = {
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator().asScala
       .filter(Files.isRegularFile(_))
       .filter(p => new String(Files.readAllBytes(p), UTF_8).contains(needle))
       .map(_.toString).toList.sorted
     finally walk.close()
-    assert(hits == List("src/main/scala/graft/GraftSession.scala"))
   }
 
-  test("no session-global conf pin under src/ wraps an await") {
+  test("GraftSession is the only SparkSession builder under src/") {
     // split so this file does not match itself
-    val pins = Seq("pinnedStatePartitions" + "(", "pinnedConf" + "(")
-    val awaits = Seq("awaitTermination", "processAllAvailable")
-    /** The argument lists of a call from its first `(`: `(args)`,
-      * `(args)(body)` or `(args) { body }`, as text. */
-    def callText(src: String, open: Int): String = {
-      var end = open
-      var next = open
-      while (next < src.length && "({".contains(src(next))) {
-        end = closing(src, next) + 1
-        next = end
-        while (next < src.length && src(next).isWhitespace) next += 1
-      }
-      src.substring(open, end)
-    }
-    /** The bracket closing the one at `open`, skipping string literals. */
-    def closing(src: String, open: Int): Int = {
-      var depth = 0
-      var inString = false
-      var i = open
-      do {
-        val c = src(i)
-        if (inString) { if (c == '\\') i += 1 else if (c == '"') inString = false }
-        else if (c == '"') inString = true
-        else if ("({".contains(c)) depth += 1
-        else if (")}".contains(c)) depth -= 1
-        i += 1
-      } while (depth > 0)
-      i - 1
-    }
-    val walk = Files.walk(Paths.get("src"))
-    val files = try walk.iterator().asScala.filter(p => p.toString.endsWith(".scala")).toList
-    finally walk.close()
-    val calls = for {
-      file <- files
-      src = new String(Files.readAllBytes(file), UTF_8)
-      pin <- pins
-      at <- Iterator.iterate(src.indexOf(pin))(i => src.indexOf(pin, i + 1)).takeWhile(_ >= 0)
-    } yield (file.toString, callText(src, at + pin.length - 1))
-    assert(calls.size >= 10, s"expected the pin's call sites, found ${calls.size}")
-    val wrapped = calls.filter { case (_, text) => awaits.exists(text.contains) }
-    assert(wrapped.isEmpty, wrapped.map { case (f, text) => s"$f: ${text.take(80)}" }
-      .mkString("a pin wraps an await (pin start() alone):\n", "\n", ""))
+    assert(filesContaining("src", "SparkSession" + ".builder") ==
+      List("src/main/scala/graft/GraftSession.scala"))
+  }
+
+  test("StreamRunner.scratchDir is the only temp-directory maker under src/main") {
+    assert(filesContaining("src/main", "createTempDirectory") ==
+      List("src/main/scala/graft/stream/StreamRunner.scala"))
+  }
+
+  test("catalog streams leave no checkpoint in the system temp dir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def leaked() = Option(tmp.list()).getOrElse(Array.empty[String])
+      .count(_.startsWith("graft-ckpt-"))
+    val before = leaked()
+    Seq("st09_stream_asof_enrich", "st22_stream_quarantine")
+      .foreach(name => SparkEntry.queries(name)(spark, sf).collect())
+    assert(leaked() == before)
   }
 
   test("the suite's session runs under the shipped settings with N = 4") {

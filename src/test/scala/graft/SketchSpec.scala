@@ -42,24 +42,6 @@ class SketchSpec extends SparkSuite {
     // dd07's join shuffles the full train shingle stream while dd18's
     // might_contain probe keeps the exchange ∝ candidates (measured ~7×
     // fewer records at this SF; asserted at a conservative 2×)
-    def shuffleRecords(body: => Unit): Long = {
-      val recs = new java.util.concurrent.atomic.AtomicLong(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          Option(te.taskMetrics)
-            .foreach(m => recs.addAndGet(m.shuffleWriteMetrics.recordsWritten): Unit)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        var prev = -1L; var cur = recs.get(); var spins = 0
-        while (cur != prev && spins < 50) {
-          prev = cur; Thread.sleep(200); cur = recs.get(); spins += 1
-        }
-        cur
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
     val s = spark
     val saved = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

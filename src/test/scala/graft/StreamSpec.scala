@@ -84,13 +84,16 @@ class StreamSpec extends SparkSuite {
       // way at start(), and the batch setting is restored the same way
       val explicit = MemoryStream[PurchaseLine]
       explicit.addData(line("A", 2, 10.0), line("B", 1, 40.0))
-      val pinned = StreamRunner.pinnedStatePartitions(s, partitions = 3) {
-        InvoiceStateMachine(explicit.toDS(), idleTimeoutMs = 0L).toDF()
-          .writeStream.outputMode("update").format("memory").queryName("pin_explicit").start()
-      }
+      // any other captured setting is restored the same way, unset included
+      val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+      val priorNoData = s.conf.getOption(noData)
+      val pinned = StreamRunner.start(s, InvoiceStateMachine(explicit.toDS(), idleTimeoutMs = 0L)
+        .toDF().writeStream.outputMode("update").format("memory").queryName("pin_explicit"),
+        partitions = 3, conf = Map(noData -> "false"))
       try {
         assert(s.conf.get(key) == "27",
           "the session's batch shuffle setting must be restored right after start()")
+        assert(s.conf.getOption(noData) == priorNoData)
         pinned.processAllAvailable()
         val pinnedParts = pinned.lastProgress.stateOperators.map(_.numShufflePartitions).distinct.toSeq
         assert(pinnedParts == Seq(3L), s"state-store partitions $pinnedParts, expected 3")
