@@ -33,29 +33,22 @@ object Bench {
     // round-4 full run inflated late streaming queries 2-4x over their
     // isolated times): each StreamRunner memory sink pins its query's full
     // output for the rest of the session, terminated queries leave state
-    // store providers (and their maintenance thread) loaded, and asStream
-    // scratch inputs pile up on disk. Scrub between timed entries — never
-    // inside them — so each query runs against a session as clean as an
-    // isolated SPARK_GRAFT_BENCH_ONLY run.
+    // store providers (and their maintenance thread) loaded, and stream
+    // scratch dirs (inputs, sinks, checkpoints) pile up on disk. Scrub
+    // between timed entries — never inside them — so each query runs
+    // against a session as clean as an isolated SPARK_GRAFT_BENCH_ONLY
+    // run. Every scratch dir goes: no entry reads another's, and the
+    // memoized replay fixtures live under target/fixtures, which the
+    // scrub leaves alone.
     def scrub(): Unit = {
       val catalog = spark.sessionState.catalog
       catalog.listLocalTempViews("graft_sink_*")
         .foreach(t => spark.catalog.dropTempView(t.table))
       org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      val scratch = new java.io.File("target/stream-scratch")
-      // DELETE only asStream scratch inputs ("in-*"); everything else in
-      // the dir (the memoized "chunks_*" fixtures st07/st11 stream from)
-      // must survive the scrub or the next entry re-pays the build
-      Option(scratch.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("in-"))
-        .foreach(del)
+      graft.stream.StreamRunner.deleteScratchDirs()
       // nudge the ContextCleaner: shuffle files and localCheckpoint blocks
       // of finished queries are reclaimed on GC of their references
       System.gc()
-    }
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
-      f.delete(): Unit
     }
     def timedOnce(kind: String, name: String)(f: => Unit): Double = {
       val t0 = System.nanoTime()

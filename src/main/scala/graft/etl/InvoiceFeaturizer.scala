@@ -84,8 +84,9 @@ object InvoiceFeaturizer {
     * at `Clustering.scala:69`; the two genuinely differ — see SURVEY.md
     * §7.4.4). Exposed as a named alternative so callers pick explicitly.
     * Accumulates in exact integer cents like every money aggregate here
-    * (floating sums are partitioning-order-dependent). */
-  /** Quantities are cast to long (the stream fold holds them as exact
+    * (floating sums are partitioning-order-dependent).
+    *
+    * Quantities are cast to long (the stream fold holds them as exact
     * long sums — see `PurchaseLine.quantity`); fractional quantities
     * would be truncated, fine for this integral-quantity domain but
     * wrong weights elsewhere. Inputs with null prices must be filtered

@@ -3,9 +3,11 @@ package graft.etl
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Stream-side validity predicates — the reference's F1/F2/F4 filters
-  * (`InvoicePipeline.scala:57-67,133-134`) as named `Column`s usable in both
-  * batch and streaming plans.
+/** Stream-side validity predicates — the reference's F1/F2 filters
+  * (`InvoicePipeline.scala:57-67`) as named `Column`s usable in both batch
+  * and streaming plans. Its F4 good-record gate (`:133-134`) is the
+  * `good` route of `graft.stream.Router.routeOf`: neither invalid nor
+  * cancelled.
   */
 object Validity {
 
@@ -35,9 +37,4 @@ object Validity {
     * `InvoicePipeline.scala:65-67`, batch twin `Clustering.scala:90`). */
   def isCancelled(invoiceNo: Column): Column =
     invoiceNo.cast("string").startsWith("C")
-
-  /** Good-record gate ahead of stateful aggregation (reference
-    * `InvoicePipeline.scala:133-134`). */
-  def isGood(rawLine: Column, invoiceNo: Column, arity: Int): Column =
-    !isInvalidLine(rawLine, arity) && !isCancelled(invoiceNo)
 }

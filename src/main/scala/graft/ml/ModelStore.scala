@@ -3,6 +3,8 @@ package graft.ml
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.ml.clustering.{BisectingKMeans, BisectingKMeansModel, KMeans, KMeansModel}
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 
@@ -33,13 +35,6 @@ object ModelStore {
     * retrain. */
   private[graft] val trains = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Bound the training set with a deterministic hash sample on the key
-    * column (1 in `sampleMod`; ≤1 disables). The offline leg — fit +
-    * threshold calibration — runs on the sample, the online leg scores
-    * the full stream/corpus with the resulting artifact, exactly the
-    * reference's train-job/pipeline split; at 100 TB the training frame
-    * must be a bounded sample or the "index build" is a full corpus pass
-    * per model. */
   /** Hard cap on the training-sample size: a proportional 1-in-mod
     * sample is NOT bounded (1/4 of 100 TB is 25 TB); the modulus widens
     * with the corpus so the expected sample stays under this many rows.
@@ -47,6 +42,13 @@ object ModelStore {
     * unchanged. */
   private val SampleCap = 65536L
 
+  /** Bound the training set with a deterministic hash sample on the key
+    * column (1 in `sampleMod`; ≤1 disables). The offline leg — fit +
+    * threshold calibration — runs on the sample, the online leg scores
+    * the full stream/corpus with the resulting artifact, exactly the
+    * reference's train-job/pipeline split; at 100 TB the training frame
+    * must be a bounded sample or the "index build" is a full corpus pass
+    * per model. */
   private def sampled(feats: DataFrame, idCol: String, sampleMod: Int): DataFrame =
     if (sampleMod <= 1) feats
     else {
@@ -97,37 +99,38 @@ object ModelStore {
                     idCol: String = "invoice_no", sampleMod: Int = 1,
                     k: Int = 4, seed: Long = 1L, maxIter: Int = 10,
                     thresholdRank: Int = 2000): AnomalyModel =
-    cache.computeIfAbsent(cacheKey("kmeans", key, featureCols, idCol, sampleMod,
-        k, seed, maxIter, thresholdRank), _ => {
-      trains.incrementAndGet()
-      val f = sampled(feats, idCol, sampleMod).cache()
-      try {
-        val model = new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-          .setFeaturesCol("features").fit(Training.assemble(f, featureCols))
-        val dir = Persistence.artifactDir(artifactName("kmeans", key, featureCols,
-          idCol, sampleMod, k, seed, maxIter, thresholdRank))
-        model.write.overwrite().save(dir)
-        calibrate(KMeansModel.load(dir).clusterCenters.map(_.toArray.toSeq).toSeq,
-          dir, f, featureCols, thresholdRank)
-      } finally f.unpersist()
-    })
+    anomaly("kmeans", key, feats, featureCols, idCol, sampleMod, k, seed, maxIter,
+      thresholdRank)(
+      new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter).setFeaturesCol("features").fit(_),
+      KMeansModel.load(_).clusterCenters)
 
   /** BisectingKMeans flavor (reference `trainBisecting.scala:11-49`). */
   def bisectingAnomaly(key: String, feats: => DataFrame, featureCols: Seq[String],
                        idCol: String = "invoice_no", sampleMod: Int = 1,
                        k: Int = 4, seed: Long = 1L, maxIter: Int = 10,
                        thresholdRank: Int = 2000): AnomalyModel =
-    cache.computeIfAbsent(cacheKey("bisecting", key, featureCols, idCol, sampleMod,
+    anomaly("bisecting", key, feats, featureCols, idCol, sampleMod, k, seed, maxIter,
+      thresholdRank)(
+      new BisectingKMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
+        .setFeaturesCol("features").fit(_),
+      BisectingKMeansModel.load(_).clusterCenters)
+
+  /** Fit `algo` once per memo key on the idCol-sorted sample, save it,
+    * load it back and calibrate the threshold from the loaded centers. */
+  private def anomaly(algo: String, key: String, feats: => DataFrame,
+                      featureCols: Seq[String], idCol: String, sampleMod: Int,
+                      k: Int, seed: Long, maxIter: Int, thresholdRank: Int)(
+                      fit: DataFrame => MLWritable,
+                      loadCenters: String => Array[Vector]): AnomalyModel =
+    cache.computeIfAbsent(cacheKey(algo, key, featureCols, idCol, sampleMod,
         k, seed, maxIter, thresholdRank), _ => {
       trains.incrementAndGet()
       val f = sampled(feats, idCol, sampleMod).cache()
       try {
-        val model = new BisectingKMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-          .setFeaturesCol("features").fit(Training.assemble(f, featureCols))
-        val dir = Persistence.artifactDir(artifactName("bisecting", key, featureCols,
+        val dir = Persistence.artifactDir(artifactName(algo, key, featureCols,
           idCol, sampleMod, k, seed, maxIter, thresholdRank))
-        model.write.overwrite().save(dir)
-        calibrate(BisectingKMeansModel.load(dir).clusterCenters.map(_.toArray.toSeq).toSeq,
+        fit(Training.assemble(f, featureCols)).write.overwrite().save(dir)
+        calibrate(loadCenters(dir).map(_.toArray.toSeq).toSeq,
           dir, f, featureCols, thresholdRank)
       } finally f.unpersist()
     })

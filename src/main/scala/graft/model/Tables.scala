@@ -53,4 +53,26 @@ object Tables {
     nanosToTimestamp(table(spark, dir, "events"), "ts")
   def documents(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
+
+  /** The identity of the file or directory tree at `path`: SHA-256 of the
+    * sorted (path, length, mtime) listing of every file under it, taken
+    * with plain filesystem stats (no Spark job). The one key for every
+    * memo over on-disk data: the testdata is regenerated IN PLACE between
+    * runs, so a memo keyed by the path alone would serve the old files'
+    * results against the new files. Files are listed, not the directory
+    * status — a dir's length is filesystem-dependent and its mtime only
+    * moves when entries are added or removed, so an in-place rewrite of
+    * same-named part files would not rotate the key. */
+  def fingerprint(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(path: org.apache.hadoop.fs.Path): Seq[String] = {
+      val st = fs.getFileStatus(path)
+      if (st.isDirectory) fs.listStatus(path).toSeq.flatMap(c => walk(c.getPath))
+      else Seq(s"${st.getPath}|${st.getLen}|${st.getModificationTime}")
+    }
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(walk(p).sorted.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
 }

@@ -25,6 +25,27 @@ import org.apache.spark.sql.functions._
   */
 object Cooccur {
 
+  /** The deduplicated (basket, item) incidence frame every consumer
+    * below derives from. */
+  private def incidOf(items: DataFrame, basketCol: String,
+                      itemCol: String): DataFrame =
+    items
+      .select(col(basketCol).as("basket"), col(itemCol).cast("long").as("item"))
+      .distinct()
+
+  private def pairCountsOf(incid: DataFrame, maxBasket: Int): DataFrame =
+    Dedup.bucketPairs(incid, "basket", col("item"), maxBasket)
+      .groupBy(col("p.a").as("item_a"), col("p.b").as("item_b"))
+      .agg(count(lit(1)).as("n_ab"))
+
+  /** Co-occurrence pair counts (`item_a < item_b`, `n_ab` = number of
+    * baskets holding both) via the capped-bucket skeleton — the raw
+    * affinity graph [[marketBasketPairs]] ranks and q27's PageRank
+    * walks. */
+  def pairCounts(items: DataFrame, basketCol: String, itemCol: String,
+                 maxBasket: Int = 64): DataFrame =
+    pairCountsOf(incidOf(items, basketCol, itemCol), maxBasket)
+
   /** Top-`k` item pairs by basket co-occurrence count.
     *
     * @param items     rows holding one (basket, item) incidence each
@@ -40,27 +61,6 @@ object Cooccur {
     *         ratio `n_ab·N / (n_a·n_b)` evaluated in one double
     *         division, so both engines round identically
     */
-  /** Co-occurrence pair counts (`item_a < item_b`, `n_ab` = number of
-    * baskets holding both) via the capped-bucket skeleton — the raw
-    * affinity graph [[marketBasketPairs]] ranks and q27's PageRank
-    * walks. */
-  /** The deduplicated (basket, item) incidence frame every consumer
-    * below derives from. */
-  private def incidOf(items: DataFrame, basketCol: String,
-                      itemCol: String): DataFrame =
-    items
-      .select(col(basketCol).as("basket"), col(itemCol).cast("long").as("item"))
-      .distinct()
-
-  private def pairCountsOf(incid: DataFrame, maxBasket: Int): DataFrame =
-    Dedup.bucketPairs(incid, "basket", col("item"), maxBasket)
-      .groupBy(col("p.a").as("item_a"), col("p.b").as("item_b"))
-      .agg(count(lit(1)).as("n_ab"))
-
-  def pairCounts(items: DataFrame, basketCol: String, itemCol: String,
-                 maxBasket: Int = 64): DataFrame =
-    pairCountsOf(incidOf(items, basketCol, itemCol), maxBasket)
-
   def marketBasketPairs(items: DataFrame, basketCol: String, itemCol: String,
                         maxBasket: Int = 64, k: Int = 100): DataFrame = {
     // the incidence frame feeds FOUR subplans (basket count, both

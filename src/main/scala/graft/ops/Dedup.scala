@@ -229,32 +229,13 @@ object Dedup {
   }
 
   /** Parameter-sidecar read memo: the `_params` assert is a 1-row Spark
-    * job (~0.5 s of scheduler overhead at any SF — the r15→r16 dd17
-    * regression), but the sidecar is immutable once written, so one read
-    * per DISTINCT ARTIFACT suffices. Keyed on the sidecar's file listing
-    * (path, length, mtime) — a rewritten index rotates the key, exactly
-    * the `chunkDirs`/`sourceId` stale-data posture — via a plain
-    * filesystem stat (no Spark job). */
+    * job (~0.5 s of scheduler overhead at any SF, paid on every dd17
+    * probe), but the sidecar is immutable once written, so one read
+    * per DISTINCT ARTIFACT suffices. Keyed on the sidecar's
+    * [[graft.model.Tables.fingerprint]], so a rewritten index rotates the
+    * key. */
   private val lshParamsMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (Int, Int, Int, Int)]()
-
-  private def fileKey(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def walk(path: org.apache.hadoop.fs.Path): Seq[String] = {
-      val st = fs.getFileStatus(path)
-      if (st.isDirectory)
-        fs.listStatus(path).toSeq.sortBy(_.getPath.toString).flatMap(c => walk(c.getPath))
-      else Seq(s"${st.getPath}|${st.getLen}|${st.getModificationTime}")
-    }
-    // SHA-256 of the full listing string, not folded 32-bit hashCodes:
-    // the memo guards a loud-failure assert, so a key collision (or a
-    // rewrite preserving per-file length+mtime hash) must not silently
-    // serve stale band parameters. The listing is tiny (1-row sidecar).
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(walk(p).sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
 
   /** Load a [[writeLshBandIndex]] artifact, FAILING LOUDLY if the
     * caller's expected band parameters differ from the ones the index
@@ -264,7 +245,7 @@ object Dedup {
                        shingleK: Int = 3, numBands: Int = 8,
                        rowsPerBand: Int = 4): DataFrame = {
     val (k, b, r, bb) = lshParamsMemo.computeIfAbsent(
-      s"$path|${fileKey(s, s"$path/_params")}", _ => {
+      s"$path|${graft.model.Tables.fingerprint(s, s"$path/_params")}", _ => {
         val p = s.read.parquet(s"$path/_params").head()
         val buckets =
           if (p.schema.fieldNames.contains("band_buckets"))

@@ -1006,26 +1006,6 @@ object Similarity {
     rankAdc(scored, k, shortlist)
   }
 
-  /** Embedding near-duplicate pairs: cosine ≥ threshold among vectors
-    * sharing an IVF cell (approximate — same recall model as MinHash/LSH
-    * banding).
-    *
-    * Pair generation goes through the capped-bucket skeleton
-    * ([[Dedup.bucketPairs]]: cell = bucket) rather than a same-cell
-    * self-join: a self-join is O(Σ cell²) with no bound — near-duplicate-
-    * heavy corpora (the dedup use case!) concentrate into few cells, and
-    * at scale one hot cell goes quadratic. Here a cell larger than
-    * `maxCell` is dropped outright (the skew guard — exact dedup already
-    * catches the identical-content blowups that create such cells), so
-    * per-bucket work is bounded regardless of corpus size.
-    *
-    * Recall has two knobs: `nProbe` assigns each vector to its `nProbe`
-    * nearest cells (a pair is caught if ANY cell is shared — multi-probe
-    * compensates for pairs straddling a cell boundary), and `nCells`
-    * scales with the corpus when left at 0 (target mean cell ≈ maxCell/4,
-    * clamped to [16, [[QuantizerSampleCap]]/4] — a quantizer can't have
-    * more centroids than its training sample).
-    */
   /** Probe-row expansion for the STREAMING semantic-dedup index (st35):
     * one `(id, vec, vnorm, cell)` row per probed cell of each non-zero
     * vector — [[embeddingDupPairs]]' candidate geometry (same multi-probe
@@ -1059,6 +1039,26 @@ object Similarity {
         col("p.a.fresh").as("fresh_a"), col("p.b.fresh").as("fresh_b"))
       .distinct()
 
+  /** Embedding near-duplicate pairs: cosine ≥ threshold among vectors
+    * sharing an IVF cell (approximate — same recall model as MinHash/LSH
+    * banding).
+    *
+    * Pair generation goes through the capped-bucket skeleton
+    * ([[Dedup.bucketPairs]]: cell = bucket) rather than a same-cell
+    * self-join: a self-join is O(Σ cell²) with no bound — near-duplicate-
+    * heavy corpora (the dedup use case!) concentrate into few cells, and
+    * at scale one hot cell goes quadratic. Here a cell larger than
+    * `maxCell` is dropped outright (the skew guard — exact dedup already
+    * catches the identical-content blowups that create such cells), so
+    * per-bucket work is bounded regardless of corpus size.
+    *
+    * Recall has two knobs: `nProbe` assigns each vector to its `nProbe`
+    * nearest cells (a pair is caught if ANY cell is shared — multi-probe
+    * compensates for pairs straddling a cell boundary), and `nCells`
+    * scales with the corpus when left at 0 (target mean cell ≈ maxCell/4,
+    * clamped to [16, [[QuantizerSampleCap]]/4] — a quantizer can't have
+    * more centroids than its training sample).
+    */
   def embeddingDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                         threshold: Double = 0.95, nCells: Int = 0,
                         nProbe: Int = 2, maxCell: Int = 256,

@@ -15,20 +15,18 @@ import QueryUtil._
   */
 object EventQueries {
 
-  private val partDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** One-time layout build: events rewritten date-partitioned
-    * (`event_date=.../part-*.parquet`), memoized per source dir. */
+    * (`event_date=.../part-*.parquet`), built through [[Fixtures.memo]]. */
   private[graft] def ensurePartitionedEvents(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    partDirs.computeIfAbsent(dir, _ => {
-      val out = new java.io.File(
-        s"target/partitioned/events_${dir.replaceAll("[^A-Za-z0-9]", "_")}").getAbsolutePath
+    Fixtures.memo(
+        new java.io.File(
+          s"target/partitioned/events_${dir.replaceAll("[^A-Za-z0-9]", "_")}").getAbsolutePath,
+        Fixtures.source(s, dir, "events")) { out =>
       Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_date").parquet(out)
-      out
-    })
+    }
 
   val builds: Map[String, B] = Map(
     "build_partitioned_events" -> ((s, dir) => { ensurePartitionedEvents(s, dir); () }))

@@ -22,70 +22,54 @@ import QueryUtil._
   */
 object IngestQueries {
 
-  /** The fixture is (re)written by whichever query runs first in a
-    * session; the oracle reads the identical file, so both engines always
-    * see the same bytes. CAVEAT: the path is shared across scale factors
-    * (oracle SQL strings are static), so two CONCURRENT Verify JVMs at
-    * different SFs race on it and the loser's cs01–cs05 compare reads the
-    * other SF's bytes — run multi-SF verifies sequentially (the driver
-    * always does; `writtenFor` already serializes within one JVM). */
+  /** The fixtures sit at fixed paths under `target/fixtures` — the
+    * oracle SQL strings are static and read the identical files, so both
+    * engines always see the same bytes. Each is (re)written through
+    * [[Fixtures.memo]] by whichever query first asks for it with a new
+    * source dir or rewritten source table. CAVEAT: the paths are shared
+    * across scale factors, so two CONCURRENT Verify JVMs at different SFs
+    * race on them and the loser's cs* compare reads the other SF's bytes
+    * — run multi-SF verifies sequentially (the memo only serializes
+    * within one JVM). */
   private val fixtureDir = new java.io.File("target/fixtures/purchases_csv").getAbsolutePath
+  private def ensureFixture(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Fixtures.memo(fixtureDir, Fixtures.source(s, dir, "orders"))(
+      PurchaseCsv.writeFixture(s, dir, _))
 
-  private val writeLock = new Object
-  private var writtenFor: String = null
-  private def ensureFixture(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    writeLock.synchronized {
-      if (writtenFor != dir) { PurchaseCsv.writeFixture(s, dir, fixtureDir); writtenFor = dir }
-    }
-
-  /** ORC twin of the lineitem table (pruned to the roundtrip columns),
-    * (re)written once per session like the CSV fixture. */
+  /** ORC twin of the lineitem table (pruned to the roundtrip columns). */
   private[graft] val orcDir = new java.io.File("target/fixtures/lineitem_orc").getAbsolutePath
-  private var orcFor: String = null
-  private[graft] def ensureOrc(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    writeLock.synchronized {
-      if (orcFor != dir) {
-        Tables.lineitem(s, dir)
-          .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_returnflag")
-          .write.mode("overwrite").orc(orcDir)
-        orcFor = dir
-      }
+  private[graft] def ensureOrc(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Fixtures.memo(orcDir, Fixtures.source(s, dir, "lineitem")) { out =>
+      Tables.lineitem(s, dir)
+        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_returnflag")
+        .write.mode("overwrite").orc(out)
     }
 
   /** JSON-lines twin of the documents table. */
   private val jsonlDir = new java.io.File("target/fixtures/documents_jsonl").getAbsolutePath
-  private var jsonlFor: String = null
-  private def ensureJsonl(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    writeLock.synchronized {
-      if (jsonlFor != dir) {
-        Tables.documents(s, dir).select("doc_id", "lang", "text")
-          .write.mode("overwrite").json(jsonlDir)
-        jsonlFor = dir
-      }
+  private def ensureJsonl(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Fixtures.memo(jsonlDir, Fixtures.source(s, dir, "documents")) { out =>
+      Tables.documents(s, dir).select("doc_id", "lang", "text")
+        .write.mode("overwrite").json(out)
     }
 
   /** XML twin of the documents table (Spark 4's built-in XML source). */
   private val xmlDir = new java.io.File("target/fixtures/documents_xml").getAbsolutePath
-  private var xmlFor: String = null
-  private def ensureXml(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    writeLock.synchronized {
-      if (xmlFor != dir) {
-        Tables.documents(s, dir).select("doc_id", "lang", "text")
-          .write.mode("overwrite")
-          .option("rootTag", "docs").option("rowTag", "doc")
-          .format("xml").save(xmlDir)
-        xmlFor = dir
-      }
+  private def ensureXml(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Fixtures.memo(xmlDir, Fixtures.source(s, dir, "documents")) { out =>
+      Tables.documents(s, dir).select("doc_id", "lang", "text")
+        .write.mode("overwrite")
+        .option("rootTag", "docs").option("rowTag", "doc")
+        .format("xml").save(out)
     }
 
   /** Messy-CSV quarantine fixture (cs15): quoted commas, RFC-4180
     * doubled quotes, a type-invalid field, and a surplus column — static
     * content, SF-independent, written once per JVM. */
   private[graft] val messyDir = new java.io.File("target/fixtures/messy_csv").getAbsolutePath
-  private var messyWritten = false
-  private def ensureMessy(): Unit = writeLock.synchronized {
-    if (!messyWritten) {
-      new java.io.File(messyDir).mkdirs()
+  private def ensureMessy(): String =
+    Fixtures.memo(messyDir, "") { out =>
+      new java.io.File(out).mkdirs()
       val content = Seq(
         "id,name,qty,price",
         "1,\"widget, large\",2,3.50",
@@ -94,10 +78,8 @@ object IngestQueries {
         "4,broken,notanumber,1.00",
         "5,extra,1,2.00,surplus").mkString("\n") + "\n"
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(messyDir, "messy.csv"), content.getBytes("UTF-8"))
-      messyWritten = true
+        java.nio.file.Paths.get(out, "messy.csv"), content.getBytes("UTF-8"))
     }
-  }
 
   /** Day-partitioned events copy with ONE day dynamically overwritten:
     * full write, then a delta holding only the min day's even event_ids
@@ -105,21 +87,17 @@ object IngestQueries {
     * ONLY that day's partition. (Static overwrite mode would wipe every
     * other day; cs13's oracle would catch exactly that.) */
   private val dynDir = new java.io.File("target/fixtures/events_dynpart").getAbsolutePath
-  private var dynFor: String = null
-  private def ensureDynOverwrite(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    writeLock.synchronized {
-      if (dynFor != dir) {
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("value"),
-            date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        ev.write.mode("overwrite").partitionBy("day").parquet(dynDir)
-        val target = ev.agg(min(col("day"))).head().getString(0)
-        ev.filter(col("day") === target && col("event_id") % 2 === 0)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("day").parquet(dynDir)
-        dynFor = dir
-      }
+  private def ensureDynOverwrite(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Fixtures.memo(dynDir, Fixtures.source(s, dir, "events")) { out =>
+      val ev = Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"), col("value"),
+          date_format(col("ts"), "yyyy-MM-dd").as("day"))
+      ev.write.mode("overwrite").partitionBy("day").parquet(out)
+      val target = ev.agg(min(col("day"))).head().getString(0)
+      ev.filter(col("day") === target && col("event_id") % 2 === 0)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day").parquet(out)
     }
 
   /** Schema-drift twin of the orders table: slice v1 (even order keys)
@@ -127,19 +105,15 @@ object IngestQueries {
     * shape a 100 TB lake always has after a producer adds a column
     * mid-feed. */
   private val evoDir = new java.io.File("target/fixtures/orders_evo").getAbsolutePath
-  private var evoFor: String = null
-  private def ensureEvo(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    writeLock.synchronized {
-      if (evoFor != dir) {
-        val o = Tables.orders(s, dir)
-        o.filter(col("o_orderkey") % 2 === 0)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-          .write.mode("overwrite").parquet(s"$evoDir/v1")
-        o.filter(col("o_orderkey") % 2 =!= 0)
-          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-          .write.mode("overwrite").parquet(s"$evoDir/v2")
-        evoFor = dir
-      }
+  private def ensureEvo(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Fixtures.memo(evoDir, Fixtures.source(s, dir, "orders")) { out =>
+      val o = Tables.orders(s, dir)
+      o.filter(col("o_orderkey") % 2 === 0)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .write.mode("overwrite").parquet(s"$out/v1")
+      o.filter(col("o_orderkey") % 2 =!= 0)
+        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+        .write.mode("overwrite").parquet(s"$out/v2")
     }
 
   /** Small-files compaction fixture: the documents table deliberately
@@ -151,20 +125,16 @@ object IngestQueries {
     * streaming sink writing per-trigger files rots a table in days. */
   private[graft] val fragDir = new java.io.File("target/fixtures/documents_fragmented").getAbsolutePath
   private[graft] val compactDir = new java.io.File("target/fixtures/documents_compacted").getAbsolutePath
-  private var compactFor: String = null
-  private[graft] def ensureCompacted(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    writeLock.synchronized {
-      if (compactFor != dir) {
-        Tables.documents(s, dir).repartition(32)
-          .write.mode("overwrite").parquet(fragDir)
-        val targetBytes = 128L * 1024 * 1024
-        val fragBytes = new java.io.File(fragDir).listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-        val nOut = ((fragBytes + targetBytes - 1) / targetBytes).max(1L).toInt
-        s.read.parquet(fragDir).coalesce(nOut)
-          .write.mode("overwrite").parquet(compactDir)
-        compactFor = dir
-      }
+  private[graft] def ensureCompacted(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Fixtures.memo(compactDir, Fixtures.source(s, dir, "documents")) { out =>
+      Tables.documents(s, dir).repartition(32)
+        .write.mode("overwrite").parquet(fragDir)
+      val targetBytes = 128L * 1024 * 1024
+      val fragBytes = new java.io.File(fragDir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+      val nOut = ((fragBytes + targetBytes - 1) / targetBytes).max(1L).toInt
+      s.read.parquet(fragDir).coalesce(nOut)
+        .write.mode("overwrite").parquet(out)
     }
 
   /** Zone-map fixture: the events table clustered on `user_id` into
@@ -176,23 +146,19 @@ object IngestQueries {
     * side of clustering (ev10 certifies the layout tool; cs18 certifies
     * that the layout actually saves the scan). */
   private[graft] val zonemapDir = new java.io.File("target/fixtures/events_zonemap").getAbsolutePath
-  private var zonemapFor: String = null
-  private[graft] def ensureZonemap(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    writeLock.synchronized {
-      if (zonemapFor != dir) {
-        val m = Tables.events(s, dir).agg(max(col("user_id"))).head.getLong(0) + 1L
-        val e = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), cents(col("value")).as("v_cents"),
-            (col("user_id") * 32L / m).cast("long").as("fid"))
-        e.repartition(col("fid")).write.mode("overwrite")
-          .partitionBy("fid").parquet(s"$zonemapDir/data")
-        // exact per-file stats — what a lakehouse footer/manifest carries
-        e.groupBy(col("fid"))
-          .agg(min(col("user_id")).as("min_uid"), max(col("user_id")).as("max_uid"),
-            count(lit(1)).as("n_rows"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$zonemapDir/manifest")
-        zonemapFor = dir
-      }
+  private[graft] def ensureZonemap(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Fixtures.memo(zonemapDir, Fixtures.source(s, dir, "events")) { out =>
+      val m = Tables.events(s, dir).agg(max(col("user_id"))).head.getLong(0) + 1L
+      val e = Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"), cents(col("value")).as("v_cents"),
+          (col("user_id") * 32L / m).cast("long").as("fid"))
+      e.repartition(col("fid")).write.mode("overwrite")
+        .partitionBy("fid").parquet(s"$out/data")
+      // exact per-file stats — what a lakehouse footer/manifest carries
+      e.groupBy(col("fid"))
+        .agg(min(col("user_id")).as("min_uid"), max(col("user_id")).as("max_uid"),
+          count(lit(1)).as("n_rows"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/manifest")
     }
 
   /** The fixture writes, exposed as timed builds (otherwise they land

@@ -1979,35 +1979,28 @@ object PipelineQueries {
     if (withMonotone) certed else certed.drop("monotone_ok")
   }
 
-  /** One-time index builds the catalog queries amortize — same memo keys
-    * as the queries above, so running a build first makes the matching
-    * query a pure probe. The bench times these separately. */
-  private val lshIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** dd17's one-time ingest fixture: the history side's LSH band table,
-    * content digests, and band-parameter sidecar, written once per
-    * (dir, documents fingerprint) — in production this artifact exists
-    * because history was ingested yesterday; rewriting it inside the
-    * timed entry (the r15 shape) mispriced dd17 by the whole write path
-    * and re-paid it on every run. The fingerprint key is the
-    * `chunkDirs`/`sourceId` stale-data posture: the driver regenerates
-    * testdata in place between rounds, and probing yesterday's index
+    * content digests, and band-parameter sidecar, built through
+    * [[Fixtures.memo]] — in production this artifact exists because
+    * history was ingested yesterday; rewriting it inside the timed entry
+    * mispriced dd17 by the whole write path and re-paid it on every run.
+    * The key carries the documents fingerprint: probing yesterday's index
     * against today's documents would silently corrupt the oracle. */
   private[graft] def ensureLshIndex(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
-    lshIndexDirs.computeIfAbsent(
-      s"$dir|${StreamQueries.sourceId(s, dir, "documents")}", _ => {
-        val idxDir = new java.io.File(
-          s"target/fixtures/lsh_index/${new java.io.File(dir).getName}").getAbsolutePath
-        val hist = Tables.documents(s, dir).filter(!(col("doc_id") % 4 === 3))
-        Dedup.writeLshBandIndex(hist, "doc_id", "text", idxDir,
-          shingleK = 3, numBands = 8, rowsPerBand = 4)
-        hist.select(md5(col("text").cast("binary")).as("h")).distinct()
-          .write.mode("overwrite").parquet(s"$idxDir/digests")
-        idxDir
-      })
+    Fixtures.memo(new java.io.File(
+        s"target/fixtures/lsh_index/${new java.io.File(dir).getName}").getAbsolutePath,
+        Fixtures.source(s, dir, "documents")) { idxDir =>
+      val hist = Tables.documents(s, dir).filter(!(col("doc_id") % 4 === 3))
+      Dedup.writeLshBandIndex(hist, "doc_id", "text", idxDir,
+        shingleK = 3, numBands = 8, rowsPerBand = 4)
+      hist.select(md5(col("text").cast("binary")).as("h")).distinct()
+        .write.mode("overwrite").parquet(s"$idxDir/digests")
+    }
 
+  /** One-time index builds the catalog queries amortize — same memo keys
+    * as the queries above, so running a build first makes the matching
+    * query a pure probe. The bench times these separately. */
   val builds: Map[String, QueryUtil.B] = Map(
     "build_lsh_index" -> ((s, dir) => { ensureLshIndex(s, dir); () }),
     "build_kmeans_model" -> { (s, dir) =>
@@ -2077,41 +2070,6 @@ object PipelineQueries {
     if ((h & 1L) == 1L) 1.0 else -1.0
   }
 
-  /** Two oracle families here:
-    *
-    *  - **Exact-semantics** (dd03, an01, mm01): the operator's result is
-    *    fully determined by its inputs with no hash/model dependence, so
-    *    the oracle recomputes it 1:1 in SQL (dd03 over string shingles,
-    *    an01 via `list_cosine_similarity` over the same double-cast
-    *    vectors — the rounded cosine hash-matches because both engines
-    *    do IEEE-754 double arithmetic over identical values).
-    *
-    *  - **Exact-recall pin** (dd01): the operator is approximate by
-    *    design (LSH banding bounds the candidate set), but every
-    *    surviving pair is *exactly verified* (true Jaccard), so output ⊆
-    *    exact answer always. The oracle IS the exact answer, which
-    *    additionally pins recall = 100% at the check SF — a driver-
-    *    verified guarantee that the banding parameters (8×4 at J≥0.5)
-    *    deliver their designed recall and that the capped-bucket skeleton
-    *    drops no true pair here. Deterministic on both sides (seeded hash
-    *    permutations), so a local pass implies a driver pass.
-    *
-    * TERMINAL rows-only set (r14): exactly dd02, dd04 (+ tx28, their
-    * fingerprint sibling). Each output IS the signature-bound artifact a
-    * user asks this operator for — dd02's pair set depends on xxhash64
-    * SimHash bit patterns, dd04's candidate pairs on quantizer cell
-    * assignment — none reproducible in DuckDB without reimplementing
-    * Spark's xxhash64/k-means, at which point the "oracle" would be a
-    * port of the code under test, not an independent check. The honest
-    * independent checks are their certificate twins, all oracle-green:
-    * an03/an04/an05/an09 (recall floors vs the brute-force frame), dd06
-    * (SimHash recall ≥0.9 vs exact Jaccard), dd10 (embedding-dup recall
-    * vs exact cosine pairs). tx07 left this list in r11 — and an02 in
-    * r14 — by moving the raw signature-bound values out of the output
-    * and certifying the operator inline (per-query structural bits +
-    * the recall floor); dd02/dd04 have no analogous move that keeps the
-    * entry distinct from its existing certificate twin (dd06/dd10
-    * already ARE the inline-bit formulation over the same operators). */
   /** dd15 AND dd17 share this oracle: the exact-Jaccard replay of the
     * incremental-ingest drop rules. For dd17 the shared SQL is itself the
     * certificate that the persisted-index probe path lands on the
@@ -2160,6 +2118,41 @@ object PipelineQueries {
       |WHERE is_new AND doc_id NOT IN (SELECT doc_id FROM dropped)
       |ORDER BY doc_id""".stripMargin
 
+  /** Two oracle families here:
+    *
+    *  - **Exact-semantics** (dd03, an01, mm01): the operator's result is
+    *    fully determined by its inputs with no hash/model dependence, so
+    *    the oracle recomputes it 1:1 in SQL (dd03 over string shingles,
+    *    an01 via `list_cosine_similarity` over the same double-cast
+    *    vectors — the rounded cosine hash-matches because both engines
+    *    do IEEE-754 double arithmetic over identical values).
+    *
+    *  - **Exact-recall pin** (dd01): the operator is approximate by
+    *    design (LSH banding bounds the candidate set), but every
+    *    surviving pair is *exactly verified* (true Jaccard), so output ⊆
+    *    exact answer always. The oracle IS the exact answer, which
+    *    additionally pins recall = 100% at the check SF — an oracle-
+    *    verified guarantee that the banding parameters (8×4 at J≥0.5)
+    *    deliver their designed recall and that the capped-bucket skeleton
+    *    drops no true pair here. Deterministic on both sides (seeded hash
+    *    permutations), so a local pass implies a pass on every machine.
+    *
+    * TERMINAL rows-only set (r14): exactly dd02, dd04 (+ tx28, their
+    * fingerprint sibling). Each output IS the signature-bound artifact a
+    * user asks this operator for — dd02's pair set depends on xxhash64
+    * SimHash bit patterns, dd04's candidate pairs on quantizer cell
+    * assignment — none reproducible in DuckDB without reimplementing
+    * Spark's xxhash64/k-means, at which point the "oracle" would be a
+    * port of the code under test, not an independent check. The honest
+    * independent checks are their certificate twins, all oracle-green:
+    * an03/an04/an05/an09 (recall floors vs the brute-force frame), dd06
+    * (SimHash recall ≥0.9 vs exact Jaccard), dd10 (embedding-dup recall
+    * vs exact cosine pairs). tx07 left this list in r11 — and an02 in
+    * r14 — by moving the raw signature-bound values out of the output
+    * and certifying the operator inline (per-query structural bits +
+    * the recall floor); dd02/dd04 have no analogous move that keeps the
+    * entry distinct from its existing certificate twin (dd06/dd10
+    * already ARE the inline-bit formulation over the same operators). */
   val oracles: Map[String, String] = Map(
     // ml01: n_points is DuckDB's independent row count of the scored
     // table (a partition-of-n check on the cluster sizes); the bits are

@@ -108,53 +108,19 @@ object StreamQueries {
           $"l_orderkey" === $"o_orderkey"), s)
   }
 
-  private val chunkDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Source-file identity (mtime + length) folded into every chunk-fixture
-    * memo key: the driver regenerates testdata IN PLACE between rounds, so
-    * a JVM-lifetime cache keyed by dir alone would replay stale chunk
-    * files against a fresh oracle — the exact failure mode
-    * `StreamSources.tsDivisor` keys around the same way. For the late/st21
-    * fixtures the stakes are higher still: batch identity is baked into
-    * the oracle's semantics, so a stale replay isn't just old data, it is
-    * a silently wrong watermark progression. */
-  private[queries] def sourceId(s: org.apache.spark.sql.SparkSession,
-                       dir: String, table: String): String = {
-    // fingerprint the sorted CHILD-FILE listing (path, length, mtime), not
-    // the directory status: dir length is filesystem-dependent (often 0)
-    // and dir mtime only moves when entries are added/removed, so an
-    // in-place rewrite of same-named part files would not rotate the key
-    // (the exact stale-replay this memo key exists to prevent) — same
-    // posture as Similarity.fileFingerprint
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def walk(path: org.apache.hadoop.fs.Path): Seq[String] = {
-      val st = fs.getFileStatus(path)
-      if (st.isDirectory)
-        fs.listStatus(path).toSeq.sortBy(_.getPath.toString).flatMap(c => walk(c.getPath))
-      else Seq(s"${st.getPath}|${st.getLen}|${st.getModificationTime}")
-    }
-    val entries = walk(p).sorted
-    java.lang.Long.toHexString(
-      entries.foldLeft(17L)((h, e) => h * 31 + e.hashCode))
-  }
-
   /** One-time fixture build for the chunked replay: rewrite the pruned
     * purchase columns as `nFiles` parquet files (rows of one invoice
-    * hash-spread across files). Memoized per (dir, nFiles, source
-    * identity) and exposed as `build_stream_chunks` so the bench
-    * attributes the write to build time, not to st07's streaming cost. */
+    * hash-spread across files). Built through [[Fixtures.memo]] and
+    * exposed as `build_stream_chunks` so the bench attributes the write
+    * to build time, not to st07's streaming cost. */
   private[graft] def ensureStreamChunks(s: org.apache.spark.sql.SparkSession,
                                         dir: String, nFiles: Int): String =
-    chunkDirs.computeIfAbsent(s"$dir|$nFiles|${sourceId(s, dir, "lineitem")}", _ => {
-      val scratch = new java.io.File(
-        s"target/stream-scratch/chunks_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$nFiles")
-        .getAbsolutePath
+    Fixtures.memo(Fixtures.dirFor("chunks", dir) + s"_$nFiles",
+        Fixtures.source(s, dir, "lineitem")) { out =>
       val needed = Seq("l_orderkey", "l_quantity", "l_extendedprice")
       Tables.lineitem(s, dir).select(needed.map(col): _*)
-        .repartition(nFiles).write.mode("overwrite").parquet(scratch)
-      scratch
-    })
+        .repartition(nFiles).write.mode("overwrite").parquet(out)
+    }
 
   val builds: Map[String, B] = Map(
     "build_doc_chunks" -> ((s, dir) => { ensureDocChunks(s, dir, 3); () }),
@@ -175,43 +141,18 @@ object StreamQueries {
 
   /** One-FILE-per-chunk fixture for the late-data audit (st19): events
     * split into four content-addressed chunks ([[lateChunkOf]] — the
-    * oracle recomputes membership), each written as a single parquet file
-    * with strictly increasing mtimes, so `maxFilesPerTrigger=1` replays
-    * chunk 0 → 1 → 2 → 3 in a deterministic batch order (the file source
-    * processes oldest-mtime first). Batch identity is what makes the
-    * watermark progression — and therefore the late-drop set — a pure
-    * function of the data. */
+    * oracle recomputes membership), replayed one file per trigger in
+    * chunk order ([[Fixtures.orderedChunks]]). Batch identity is what
+    * makes the watermark progression — and therefore the late-drop set —
+    * a pure function of the data. */
   private[graft] def ensureLateChunks(s: org.apache.spark.sql.SparkSession,
                                       dir: String): String =
-    chunkDirs.computeIfAbsent(s"late|$dir|${sourceId(s, dir, "events")}", _ => {
-      val scratch = new java.io.File(
-        s"target/stream-scratch/late_chunks_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
-        .getAbsolutePath
-      val ev = Tables.table(s, dir, "events")
-      val norm = ev.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => ev
-        case _ => ev.withColumn("ts",
-          expr("unix_micros(CAST(ts AS TIMESTAMP)) * 1000"))
-      }
-      val base = System.currentTimeMillis()
-      for (c <- 0 until 4) {
-        val tmp = s"$scratch/_tmp_$c"
-        norm.filter(lateChunkOf(col("event_id")) === c)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val dest = new java.io.File(s"$scratch/chunk_$c.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dest.setLastModified(base + c * 2000L)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      scratch
-    })
+    Fixtures.memo(Fixtures.dirFor("late_chunks", dir),
+        Fixtures.source(s, dir, "events")) { out =>
+      val ev = Fixtures.eventsNanos(s, dir)
+      Fixtures.orderedChunks(
+        (0 until 4).map(c => ev.filter(lateChunkOf(col("event_id")) === c)), out)
+    }
 
   /** Chunked multi-batch replay of the invoice state machine: the lineitem
     * scan (pruned to the three purchase columns) is rewritten to `nFiles`
@@ -299,22 +240,6 @@ object StreamQueries {
     (lastEmissionPerKey(raw, s), q)
   }
 
-  /** The st19 replay: hour-tumbling event counts under a 1 h watermark
-    * over the [[ensureLateChunks]] four-batch replay, plus the audit
-    * columns (total late-dropped rows; the boundary-collision premise).
-    *
-    * ENGINE LATE-FILTER SEMANTICS (measured, and pinned by StreamSpec's
-    * two probes — do not "fix" this to the naive model): under a
-    * back-to-back `AvailableNow` replay, the stateful operator in batch k
-    * filters input with the watermark derived from data through batch
-    * **k−2**, one batch LATER than the committed watermark the progress
-    * log displays — so chunk 0 and chunk 1 are never filtered, chunk 2
-    * is filtered at wm(c0) = max ts(c0) − 1 h, and chunk 3 at
-    * wm(c0∪c1). A row is dropped iff its window END ≤ that watermark
-    * (`numRowsDroppedByWatermark` counts dropped post-partial-agg rows,
-    * not raw rows, so the audit derives raw drops from the sink).
-    * Returns the terminated query too so StreamSpec can pin ≥4
-    * micro-batches and genuine drops. */
   /** The shared st19/st20 streaming plan: hour-tumbling event counts
     * under a 1 h watermark over the [[ensureLateChunks]] four-batch
     * replay. */
@@ -336,6 +261,22 @@ object StreamQueries {
         $"n")
   }
 
+  /** The st19 replay: hour-tumbling event counts under a 1 h watermark
+    * over the [[ensureLateChunks]] four-batch replay, plus the audit
+    * columns (total late-dropped rows; the boundary-collision premise).
+    *
+    * ENGINE LATE-FILTER SEMANTICS (measured, and pinned by StreamSpec's
+    * two probes — do not "fix" this to the naive model): under a
+    * back-to-back `AvailableNow` replay, the stateful operator in batch k
+    * filters input with the watermark derived from data through batch
+    * **k−2**, one batch LATER than the committed watermark the progress
+    * log displays — so chunk 0 and chunk 1 are never filtered, chunk 2
+    * is filtered at wm(c0) = max ts(c0) − 1 h, and chunk 3 at
+    * wm(c0∪c1). A row is dropped iff its window END ≤ that watermark
+    * (`numRowsDroppedByWatermark` counts dropped post-partial-agg rows,
+    * not raw rows, so the audit derives raw drops from the sink).
+    * Returns the terminated query too so StreamSpec can pin ≥4
+    * micro-batches and genuine drops. */
   private[graft] def lateDataAudit(s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
     import s.implicits._
@@ -2400,96 +2341,41 @@ object StreamQueries {
     * windows and the sketch merge is exercised, not vacuous. */
   private[graft] def ensureEventChunks(s: org.apache.spark.sql.SparkSession,
                                        dir: String, nFiles: Int): String =
-    chunkDirs.computeIfAbsent(s"events|$dir|$nFiles|${sourceId(s, dir, "events")}", _ => {
-      val scratch = new java.io.File(
-        s"target/stream-scratch/event_chunks_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$nFiles")
-        .getAbsolutePath
-      // The raw read's ts type depends on which THREAD resolved the
-      // parquet schema (`nanosAsLong` resolves through the thread-local
-      // SQLConf — see Tables.nanosToTimestamp): nanos long, or
-      // TIMESTAMP_NTZ micros. The chunk readers' explicit schema expects
-      // the nanos long, so normalize BEFORE writing. The NTZ leg
-      // re-derives nanos as micros·1000 — lossless for this data (no
-      // event carries sub-microsecond digits; the long leg keeps full
-      // nanos regardless), so st16's raw-nanos tie-breaking is unchanged.
-      val ev = Tables.table(s, dir, "events")
-      val norm = ev.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => ev
-        case _ => ev.withColumn("ts",
-          expr("unix_micros(CAST(ts AS TIMESTAMP)) * 1000"))
-      }
-      norm.repartition(nFiles).write.mode("overwrite").parquet(scratch)
-      scratch
-    })
+    Fixtures.memo(Fixtures.dirFor("event_chunks", dir) + s"_$nFiles",
+        Fixtures.source(s, dir, "events")) { out =>
+      Fixtures.eventsNanos(s, dir).repartition(nFiles).write.mode("overwrite").parquet(out)
+    }
 
   /** st24's TIME-ORDERED chunk fixture: events split into four contiguous
     * event-time quarters (chunk boundaries derived from the data's min/max
     * ts — content-addressed, so the replay is a pure function of the
-    * table), each a single parquet file with strictly increasing mtimes so
-    * `maxFilesPerTrigger=1` replays them oldest-quarter-first (the
-    * [[ensureLateChunks]] mtime trick). In-order arrival is what lets a
-    * TIGHT watermark purge state mid-stream without ever late-dropping a
-    * row: the engine's lagged filter watermark (through batch k−2, ends
-    * ~2 days into quarter k−1) is always below quarter k's minimum event
-    * time because a quarter spans ~7.5 days > the 2-day delay. */
+    * table), replayed oldest-quarter-first ([[Fixtures.orderedChunks]]).
+    * In-order arrival is what lets a TIGHT watermark purge state
+    * mid-stream without ever late-dropping a row: the engine's lagged
+    * filter watermark (through batch k−2, ends ~2 days into quarter k−1)
+    * is always below quarter k's minimum event time because a quarter
+    * spans ~7.5 days > the 2-day delay. */
   private[graft] def ensureOrderedEventChunks(s: org.apache.spark.sql.SparkSession,
                                               dir: String): String =
-    chunkDirs.computeIfAbsent(s"ordered|$dir|${sourceId(s, dir, "events")}", _ => {
-      val scratch = new java.io.File(
-        s"target/stream-scratch/ordered_chunks_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
-        .getAbsolutePath
-      val ev = Tables.table(s, dir, "events")
-      val norm = ev.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => ev
-        case _ => ev.withColumn("ts",
-          expr("unix_micros(CAST(ts AS TIMESTAMP)) * 1000"))
-      }
+    Fixtures.memo(Fixtures.dirFor("ordered_chunks", dir),
+        Fixtures.source(s, dir, "events")) { out =>
+      val norm = Fixtures.eventsNanos(s, dir)
       // A6-style scalar pull: one min/max to fix the quarter boundaries
       val b = norm.agg(min(col("ts")), max(col("ts"))).first()
       val (lo, hi) = (b.getLong(0), b.getLong(1))
       val step = (hi - lo) / 4 + 1
-      val base = System.currentTimeMillis()
-      for (c <- 0 until 4) {
-        val tmp = s"$scratch/_tmp_$c"
-        val quarter = norm.filter(expr(s"(ts - ${lo}L) div ${step}L") === c)
-        // data-shape precondition, named: st24's oracle semantics assume
-        // >=4 micro-batches and a monotone watermark progression, both of
-        // which need every event-time quarter non-empty. An empty quarter
-        // writes no part file, which would otherwise surface as a cryptic
-        // missing-file error here — fail with the actual cause instead so
-        // a skewed SF degrades diagnosably.
-        quarter.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(
-            s"event-time quarter $c of [$lo, $hi] is empty for $dir — the " +
-              "ordered-chunk fixture requires events spread across all 4 " +
-              "quarters (st24's >=4-micro-batch / watermark-progression " +
-              "precondition); regenerate or rescale the events table"))
-        val dest = new java.io.File(s"$scratch/chunk_$c.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dest.setLastModified(base + c * 2000L)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      scratch
-    })
+      // data-shape precondition, named: st24's oracle semantics assume
+      // >=4 micro-batches and a monotone watermark progression, both of
+      // which need every event-time quarter non-empty — fail with the
+      // actual cause so a skewed SF degrades diagnosably
+      Fixtures.orderedChunks(
+        (0 until 4).map(c => norm.filter(expr(s"(ts - ${lo}L) div ${step}L") === c)), out,
+        c => s"event-time quarter $c of [$lo, $hi] is empty for $dir — the " +
+          "ordered-chunk fixture requires events spread across all 4 " +
+          "quarters (st24's >=4-micro-batch / watermark-progression " +
+          "precondition); regenerate or rescale the events table")
+    }
 
-  /** st24's streaming leg, shared with StreamSpec: the SAME per-day
-    * windowed HLL++ aggregate as [[windowedSketchReplay]], but under a
-    * production-realistic 2-DAY watermark over the time-ordered
-    * [[ensureOrderedEventChunks]] replay — so closed windows are
-    * genuinely EVICTED from the state store mid-stream (st12's 60-day
-    * watermark holds every window open for the whole replay: correct for
-    * its certificate, but at 100× event history that state never
-    * purges). In-order chunk arrival guarantees no row is late-dropped
-    * (see the fixture note), so each window's final update-mode emission
-    * is still its complete aggregate — same hash oracle as st12 — while
-    * the terminated query's `stateOperators.numRowsTotal` proves the
-    * purge: only the watermark-open tail of windows may remain. */
   /** st26's synopsis size (shared with its StreamSpec probe). */
   private[graft] val KmvStateK = 256
 
@@ -2563,6 +2449,18 @@ object StreamQueries {
     purgingWindowReplay(s, dir,
       graft.functions.KmvSketchAgg.kmv(col("user_id"), KmvStateK).as("sk"))
 
+  /** st24's streaming leg, shared with StreamSpec: the SAME per-day
+    * windowed HLL++ aggregate as [[windowedSketchReplay]], but under a
+    * production-realistic 2-DAY watermark over the time-ordered
+    * [[ensureOrderedEventChunks]] replay — so closed windows are
+    * genuinely EVICTED from the state store mid-stream (st12's 60-day
+    * watermark holds every window open for the whole replay: correct for
+    * its certificate, but at 100× event history that state never
+    * purges). In-order chunk arrival guarantees no row is late-dropped
+    * (see the fixture note), so each window's final update-mode emission
+    * is still its complete aggregate — same hash oracle as st12 — while
+    * the terminated query's `stateOperators.numRowsTotal` proves the
+    * purge: only the watermark-open tail of windows may remain. */
   private[graft] def purgingSketchReplay(s: org.apache.spark.sql.SparkSession,
                                          dir: String)
       : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
@@ -2837,8 +2735,9 @@ object StreamQueries {
     * through [[lshIngestBatch]] under an AvailableNow trigger. Callable
     * again with the same `base` after more chunks land - the checkpoint
     * skips already-processed files - which is exactly the resume seam
-    * the compaction spec exercises. */
-  /** `maxHot`, when set, turns on IN-STREAM auto-compaction (st37): after
+    * the compaction spec exercises.
+    *
+    * `maxHot`, when set, turns on IN-STREAM auto-compaction (st37): after
     * each batch's ingest commits, every sink artifact of the pipeline is
     * folded once its visible hot batch-directory count exceeds the
     * budget — the single appender doubles as the single compactor, so
@@ -2899,120 +2798,60 @@ object StreamQueries {
 
   /** st29's chunk fixture: the documents table split into `nFiles`
     * CONTENT-ADDRESSED chunks (`doc_id % nFiles` — the oracle recomputes
-    * membership), each a single parquet file with strictly increasing
-    * mtimes so `maxFilesPerTrigger=1` replays chunk 0 → 1 → … in a
-    * deterministic batch order (the [[ensureLateChunks]] mtime trick).
-    * Batch identity is load-bearing: st29's "earlier arrival" drop rule
-    * is a pure function of (chunk, doc_id), so the whole sequential
-    * ingest replays exactly in DuckDB. */
+    * membership), replayed one file per trigger in chunk order
+    * ([[Fixtures.orderedChunks]]). Batch identity is load-bearing: st29's
+    * "earlier arrival" drop rule is a pure function of (chunk, doc_id), so
+    * the whole sequential ingest replays exactly in DuckDB. */
   private[graft] def ensureDocChunks(s: org.apache.spark.sql.SparkSession,
                                      dir: String, nFiles: Int): String =
-    chunkDirs.computeIfAbsent(s"docpq|$dir|$nFiles|${sourceId(s, dir, "documents")}", _ => {
-      val scratch = new java.io.File(
-        s"target/stream-scratch/doc_chunks_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$nFiles")
-        .getAbsolutePath
+    Fixtures.memo(Fixtures.dirFor("doc_chunks", dir) + s"_$nFiles",
+        Fixtures.source(s, dir, "documents")) { out =>
       val docs = Tables.documents(s, dir)
-      val base = System.currentTimeMillis()
-      for (c <- 0 until nFiles) {
-        val tmp = s"$scratch/_tmp_$c"
-        docs.filter(col("doc_id") % nFiles === c)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val dest = new java.io.File(s"$scratch/chunk_$c.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dest.setLastModified(base + c * 2000L)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      scratch
-    })
+      Fixtures.orderedChunks(
+        (0 until nFiles).map(c => docs.filter(col("doc_id") % nFiles === c)), out)
+    }
 
-  /** st30's chunk fixture: the an01/an02 query set (`vec_id < 10`) split
-    * into `nFiles` content-addressed chunks (`vec_id % nFiles`), each a
-    * single parquet file with strictly increasing mtimes — the
-    * [[ensureDocChunks]] construction for the embeddings table. */
   /** The FULL embeddings table as `nFiles` content-addressed chunk files
     * (vec_id % nFiles), mtime-ordered — the ingest replay fixture for
     * st34 (where the stream IS the corpus arriving), vs
     * [[ensureEmbQueryChunks]] which streams only the an01 query set. */
   private[graft] def ensureEmbChunks(s: org.apache.spark.sql.SparkSession,
                                      dir: String, nFiles: Int): String =
-    chunkDirs.computeIfAbsent(s"embfull|$dir|$nFiles|${sourceId(s, dir, "embeddings")}", _ => {
-      val scratch = new java.io.File(
-        s"target/stream-scratch/emb_chunks_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$nFiles")
-        .getAbsolutePath
+    Fixtures.memo(Fixtures.dirFor("emb_chunks", dir) + s"_$nFiles",
+        Fixtures.source(s, dir, "embeddings")) { out =>
       val all = Tables.embeddings(s, dir)
-      val base = System.currentTimeMillis()
-      for (c <- 0 until nFiles) {
-        val tmp = s"$scratch/_tmp_$c"
-        all.filter(col("vec_id") % nFiles === c)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val dest = new java.io.File(s"$scratch/chunk_$c.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dest.setLastModified(base + c * 2000L)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      scratch
-    })
+      Fixtures.orderedChunks(
+        (0 until nFiles).map(c => all.filter(col("vec_id") % nFiles === c)), out)
+    }
 
+  /** st30's chunk fixture: the an01/an02 query set (`vec_id < 10`) split
+    * into `nFiles` content-addressed chunks (`vec_id % nFiles`), each a
+    * single parquet file with strictly increasing mtimes — the
+    * [[ensureDocChunks]] construction for the embeddings table. */
   private[graft] def ensureEmbQueryChunks(s: org.apache.spark.sql.SparkSession,
                                           dir: String, nFiles: Int): String =
-    chunkDirs.computeIfAbsent(s"embq|$dir|$nFiles|${sourceId(s, dir, "embeddings")}", _ => {
-      val scratch = new java.io.File(
-        s"target/stream-scratch/embq_chunks_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$nFiles")
-        .getAbsolutePath
+    Fixtures.memo(Fixtures.dirFor("embq_chunks", dir) + s"_$nFiles",
+        Fixtures.source(s, dir, "embeddings")) { out =>
       val q0 = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-      val base = System.currentTimeMillis()
-      for (c <- 0 until nFiles) {
-        val tmp = s"$scratch/_tmp_$c"
-        q0.filter(col("vec_id") % nFiles === c)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val dest = new java.io.File(s"$scratch/chunk_$c.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dest.setLastModified(base + c * 2000L)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      scratch
-    })
+      Fixtures.orderedChunks(
+        (0 until nFiles).map(c => q0.filter(col("vec_id") % nFiles === c)), out)
+    }
 
   /** st22's CSV chunk fixture: the documents table as 3 headerless CSV
     * chunk files plus one injected file of malformed lines (a
-    * type-invalid long, a surplus column). Memoized per (dir, content)
-    * like [[ensureEventChunks]]. The corpus carries no commas/quotes in
-    * `lang`, so the clean chunks parse losslessly under the explicit
-    * schema. */
+    * type-invalid long, a surplus column). The corpus carries no
+    * commas/quotes in `lang`, so the clean chunks parse losslessly under
+    * the explicit schema. */
   private[graft] def ensureDocCsvChunks(s: org.apache.spark.sql.SparkSession,
                                         dir: String, nFiles: Int): String =
-    chunkDirs.computeIfAbsent(s"doccsv|$dir|$nFiles|${sourceId(s, dir, "documents")}", _ => {
-      val scratch = new java.io.File(
-        s"target/stream-scratch/doc_csv_chunks_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$nFiles")
-        .getAbsolutePath
+    Fixtures.memo(Fixtures.dirFor("doc_csv_chunks", dir) + s"_$nFiles",
+        Fixtures.source(s, dir, "documents")) { out =>
       Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
-        .repartition(nFiles).write.mode("overwrite").csv(scratch)
+        .repartition(nFiles).write.mode("overwrite").csv(out)
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(scratch, "injected_bad.csv"),
+        java.nio.file.Paths.get(out, "injected_bad.csv"),
         "notanumber,xx,10\n7,xx,2,surplus,extra\n".getBytes("UTF-8"))
-      scratch
-    })
+    }
 
   /** The batch twin of the state machine's weighted per-invoice fold.
     * The zero-net-quantity CASE mirrors `InvoiceStateMachine.toAgg`'s

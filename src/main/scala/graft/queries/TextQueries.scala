@@ -85,7 +85,7 @@ object TextQueries {
   /** One training pass per (session, dir, documents fingerprint):
     * tx26/tx29/tx32 all consume the same trained state, so the 8-round
     * driver-coordinated loop runs ONCE per session in a full bench
-    * instead of three times (the `chunkDirs` memo posture, including the
+    * instead of three times (the [[Fixtures]] memo posture, including the
     * stale-data guard — the driver regenerates testdata in place between
     * rounds, so the key folds in the documents file fingerprint). The
     * session identity is part of the key because the cached vocabulary
@@ -106,7 +106,7 @@ object TextQueries {
   private def bpeTrained(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(Long, String, String, String, Long)], org.apache.spark.sql.DataFrame) = {
     val prefix = s"${sessionId(s)}|$dir|"
-    val key = prefix + StreamQueries.sourceId(s, dir, "documents")
+    val key = prefix + Tables.fingerprint(s, s"$dir/documents.parquet")
     // evictions, before every lookup: (a) same-prefix SUPERSEDED
     // fingerprints — the driver regenerates testdata in place between
     // rounds, and a stale entry pins its localCheckpoint'd blocks

@@ -38,12 +38,6 @@ object Router {
   def classified(records: DataFrame, arity: Int = 8): DataFrame =
     records.withColumn("route", routeOf(col("key"), col("value"), arity))
 
-  /** The good-record gate ahead of stateful aggregation (F4, reference
-    * `InvoicePipeline.scala:133-134`) — records that route to neither the
-    * invalid nor the cancelled branch. */
-  def goodRecords(records: DataFrame, arity: Int = 8): DataFrame =
-    records.filter(Validity.isGood(col("value"), col("key"), arity))
-
   /** Run a finite kafka-shaped stream through the router, fanning each
     * route out to its own parquet sink directory (`baseDir/<route>`), with
     * the reference's per-batch distinct applied to the cancelled branch

@@ -88,10 +88,13 @@ object StreamRunner {
     * checkpoints (`GraftSessionSpec` keeps it that way), so none is left
     * in the system temp dir. Scratch inputs must outlive the stream
     * returned by [[asStream]] (readers list the dir per trigger), and
-    * foreachBatch sink dirs the lazy DataFrame returned over them, so
-    * every dir is deleted at JVM exit instead of eagerly, by one shutdown
-    * hook over every registered dir (a hook per call would pile up for as
-    * long as the session lives). */
+    * foreachBatch sink dirs the lazy DataFrame returned over them, so no
+    * dir is deleted eagerly: [[deleteScratchDirs]] deletes every
+    * registered dir at JVM exit (one shutdown hook, not one per call) and
+    * whenever a caller knows no stream or result still reads them — Bench
+    * between timed entries. Nothing memoized lives here: the memoized
+    * replay fixtures are built under `target/fixtures` by
+    * [[graft.queries.Fixtures]]. */
   def scratchDir(prefix: String): String = {
     val dir = Files.createTempDirectory(
       Files.createDirectories(Paths.get("target/stream-scratch").toAbsolutePath), prefix).toString
@@ -140,11 +143,18 @@ object StreamRunner {
     (spark.table(sink), q)
   }
 
-  private val exitDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    exitDirs.forEach(dir => deleteRecursively(new java.io.File(dir)))))
+  /** Delete every [[scratchDir]] tree made so far. Only safe when no
+    * stream runs and no DataFrame over a scratch dir is still to be read. */
+  def deleteScratchDirs(): Unit = {
+    val it = exitDirs.iterator()
+    while (it.hasNext) { deleteRecursively(new java.io.File(it.next())); it.remove() }
+  }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private val exitDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val exitHook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteScratchDirs()))
+
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(): Unit
   }

@@ -52,15 +52,12 @@ object StreamSources {
     * as nanos) or year ~56k (nanos read as micros) on the other. */
   private val eventsTsDivisor = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[graft] def tsDivisor(spark: SparkSession, dir: String): Long = {
-    // The cache key carries the file's identity (mtime + length), not the
-    // dir alone: the driver regenerates testdata in place between rounds,
-    // and a JVM-lifetime cache keyed by dir would keep serving the OLD
-    // layout's divisor — silently shifting every streamed event by 1000×
-    // (1970 or year ~56k) — instead of re-detecting from the new footer.
-    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val key = s"$dir|${st.getModificationTime}|${st.getLen}"
+    // The cache key carries the file's fingerprint, not the dir alone:
+    // the testdata is regenerated in place between runs, and a
+    // JVM-lifetime cache keyed by dir would keep serving the OLD layout's
+    // divisor — silently shifting every streamed event by 1000× (1970 or
+    // year ~56k) — instead of re-detecting from the new footer.
+    val key = s"$dir|${graft.model.Tables.fingerprint(spark, s"$dir/events.parquet")}"
     eventsTsDivisor.computeIfAbsent(key, _ =>
       spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
         case LongType => 1000L

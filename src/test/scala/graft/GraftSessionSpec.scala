@@ -8,18 +8,21 @@ import scala.jdk.CollectionConverters._
 /** The session policy lives in one place: [[GraftSession]] is the only
   * SparkSession builder under `src/`, and the suite runs under exactly
   * the settings that ship. The scratch policy too: streams take their
-  * scratch directories from [[graft.stream.StreamRunner.scratchDir]]. */
+  * scratch directories from [[graft.stream.StreamRunner.scratchDir]],
+  * and deleting them leaves the memoized fixtures alone. */
 class GraftSessionSpec extends SparkSuite {
 
-  /** The files under `root` whose text contains `needle`, sorted. */
-  private def filesContaining(root: String, needle: String): List[String] = {
-    val walk = Files.walk(Paths.get(root))
-    try walk.iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .filter(p => new String(Files.readAllBytes(p), UTF_8).contains(needle))
-      .map(_.toString).toList.sorted
-    finally walk.close()
+  /** Every path under `root`, `root` included. */
+  private def walk(root: String): List[java.nio.file.Path] = {
+    val paths = Files.walk(Paths.get(root))
+    try paths.iterator().asScala.toList finally paths.close()
   }
+
+  /** The files under `root` whose text contains `needle`, sorted. */
+  private def filesContaining(root: String, needle: String): List[String] =
+    walk(root).filter(Files.isRegularFile(_))
+      .filter(p => new String(Files.readAllBytes(p), UTF_8).contains(needle))
+      .map(_.toString).sorted
 
   test("GraftSession is the only SparkSession builder under src/") {
     // split so this file does not match itself
@@ -30,6 +33,31 @@ class GraftSessionSpec extends SparkSuite {
   test("StreamRunner.scratchDir is the only temp-directory maker under src/main") {
     assert(filesContaining("src/main", "createTempDirectory") ==
       List("src/main/scala/graft/stream/StreamRunner.scala"))
+  }
+
+  test("the scratch root is named only in StreamRunner") {
+    // split so this file does not match itself
+    assert(filesContaining("src", "target/" + "stream-scratch") ==
+      List("src/main/scala/graft/stream/StreamRunner.scala"))
+  }
+
+  test("deleteScratchDirs leaves no registered scratch dir and no fixture touched") {
+    def fixtureTree() =
+      walk("target/fixtures").map(p => p.toString -> p.toFile.lastModified).sorted
+    graft.queries.StreamQueries.ensureLateChunks(spark, sf)
+    val fixtures = fixtureTree()
+    val mine = graft.stream.StreamRunner.scratchDir("scrub-")
+    val scratch = new java.io.File(mine).getParentFile
+    def listed() = Option(scratch.list()).getOrElse(Array.empty[String]).toSet
+    val before = listed() - new java.io.File(mine).getName
+    val nested = Files.createDirectories(Paths.get(mine, "a", "b"))
+    Files.write(nested.resolve("f.txt"), "x".getBytes(UTF_8))
+    SparkEntry.queries("st09_stream_asof_enrich")(spark, sf).collect()
+    val made = listed() -- before
+    assert(made.size >= 2, made)
+    graft.stream.StreamRunner.deleteScratchDirs()
+    assert((listed() intersect made).isEmpty)
+    assert(fixtureTree() == fixtures)
   }
 
   test("catalog streams leave no checkpoint in the system temp dir") {
