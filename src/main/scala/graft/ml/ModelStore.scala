@@ -2,7 +2,7 @@ package graft.ml
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.ml.clustering.{BisectingKMeans, BisectingKMeansModel, KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.{BisectingKMeansModel, KMeansModel}
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.sql.DataFrame
@@ -101,7 +101,7 @@ object ModelStore {
                     thresholdRank: Int = 2000): AnomalyModel =
     anomaly("kmeans", key, feats, featureCols, idCol, sampleMod, k, seed, maxIter,
       thresholdRank)(
-      new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter).setFeaturesCol("features").fit(_),
+      Training.kMeansFit(seed, maxIter)(_, k)._1,
       KMeansModel.load(_).clusterCenters)
 
   /** BisectingKMeans flavor (reference `trainBisecting.scala:11-49`). */
@@ -111,8 +111,7 @@ object ModelStore {
                        thresholdRank: Int = 2000): AnomalyModel =
     anomaly("bisecting", key, feats, featureCols, idCol, sampleMod, k, seed, maxIter,
       thresholdRank)(
-      new BisectingKMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-        .setFeaturesCol("features").fit(_),
+      Training.bisectingFit(seed, maxIter)(_, k)._1,
       BisectingKMeansModel.load(_).clusterCenters)
 
   /** Fit `algo` once per memo key on the idCol-sorted sample, save it,

@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.ml.clustering.{BisectingKMeansModel, KMeansModel}
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.apps.{Pipeline, Train}
+import graft.etl.InvoiceFeaturizer
+import graft.ml.{Scoring, Training}
 
 /** End-to-end of the reference's operational surface: the offline
   * training job writes model + threshold artifacts; the online pipeline
@@ -14,7 +19,7 @@ class AppsSpec extends SparkSuite {
   test("writeBatch: at-least-once replay converges to exactly one copy") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("wb-").toString + "/out"
+    val dir = testDir("wb-") + "/out"
     def committed() = graft.stream.IdempotentSink.read(s, dir)
     // first attempt commits batch 7 as one atomic directory, "crashes"
     // before the streaming checkpoint advances
@@ -42,7 +47,7 @@ class AppsSpec extends SparkSuite {
   test("curate job end-to-end: deterministic curated corpus with all gates applied") {
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("curate-spec-").toString
+    val base = testDir("curate-spec-")
     val report = graft.apps.Curate.run(s, sf, s"$base/run1")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // the funnel only narrows, and nothing vanishes entirely
@@ -125,7 +130,7 @@ class AppsSpec extends SparkSuite {
   private lazy val artifacts = {
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("apps-spec-").toString
+    val base = testDir("apps-spec-")
     // offline: train both models from the same data the pipeline will see
     val km = Train.run(s, sf, s"$base/model_km", s"$base/thr_km.txt", "kmeans")
     val bis = Train.run(s, sf, s"$base/model_bis", s"$base/thr_bis.txt", "bisecting")
@@ -234,7 +239,7 @@ class AppsSpec extends SparkSuite {
   }
 
   test("pipeline: a failed publish fails the router, and a rerun leaves exactly one copy") {
-    val out = java.nio.file.Files.createTempDirectory("failed-publish-").toString
+    val out = testDir("failed-publish-")
     // a plain file where the invalid-route sink stages its batches: that
     // writer fails, and its two siblings still publish batch 0 before the
     // batch fails (the concurrent fan-out awaits every writer)
@@ -255,7 +260,7 @@ class AppsSpec extends SparkSuite {
 
   test("pipeline: a failed model load stops the router it started") {
     val s = spark
-    val base = java.nio.file.Files.createTempDirectory("failed-load-").toString
+    val base = testDir("failed-load-")
     assert(new java.io.File(s"$base/records").mkdirs())
     // continuous mode: the router would trigger forever if left running
     try {
@@ -272,7 +277,7 @@ class AppsSpec extends SparkSuite {
     val conf = s.conf
     val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
       .map(key => key -> conf.getOption(key))
-    val base = java.nio.file.Files.createTempDirectory("train-inv-").toString
+    val base = testDir("train-inv-")
     val results = try {
       conf.set("spark.sql.adaptive.enabled", "false")
       Seq(1, 4, 7).map { n =>
@@ -293,11 +298,65 @@ class AppsSpec extends SparkSuite {
         .mkString("Train.run differs across partitionings: ", "; ", ""))
   }
 
+  /** The features `Train.run` fits on. */
+  private def trainFeatures() = graft.queries.InvoiceQueries.invoiceFeatures(spark, sf)
+    .filter(InvoiceFeaturizer.validInvoice(col("invoice_no")))
+
+  test("train job: k, threshold and centers equal the full sweep's elbow pick, both algorithms") {
+    val (base, km, bis) = artifacts
+    val feats = trainFeatures().cache()
+    try {
+      val assembled = Training.assemble(feats, InvoiceFeaturizer.FeatureCols)
+      // every k of 2..20 fitted, then the job's elbow rule and threshold
+      def fullSweepPick[M](sweep: Seq[(Int, M, Double)])(centersOf: M => Array[Vector]) = {
+        val (k, model, _) = sweep(Training.elbowSelection(sweep.map(_._3), Train.ElbowRatio))
+        val centers = centersOf(model).map(_.toArray.toSeq).toSeq
+        (k, Training.threshold(Scoring.score(feats, InvoiceFeaturizer.FeatureCols, centers, 0.0),
+          "dist", Train.ThresholdRank), centers)
+      }
+      def saved(centers: Array[Vector]) = centers.map(_.toArray.toSeq).toSeq
+      val (kKm, thrKm, centersKm) =
+        fullSweepPick(Training.kMeansSweep(assembled, 2 to 20, seed = 1L))(_.clusterCenters)
+      assert((kKm, thrKm) == km, s"kmeans: full sweep gives ${(kKm, thrKm)}, Train.run $km")
+      assert(saved(KMeansModel.load(s"$base/model_km").clusterCenters) == centersKm)
+      val (kBis, thrBis, centersBis) =
+        fullSweepPick(Training.bisectingSweep(assembled, 2 to 20, seed = 1L))(_.clusterCenters)
+      assert((kBis, thrBis) == bis, s"bisecting: full sweep gives ${(kBis, thrBis)}, Train.run $bis")
+      assert(saved(BisectingKMeansModel.load(s"$base/model_bis").clusterCenters) == centersBis)
+    } finally feats.unpersist(): Unit
+  }
+
+  test("train job: an unknown algorithm is rejected, and nothing is written") {
+    val base = testDir("train-algo-")
+    def rejected(train: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](train)
+      assert(e.getMessage.contains("kmeans or bisecting"), e.getMessage)
+    }
+    Seq("kmean", "KMeans", "bisect", "").foreach { algo =>
+      rejected(Train.run(spark, sf, s"$base/model", s"$base/thr.txt", algo))
+    }
+    rejected(Train.main(Array(sf, s"$base/model", s"$base/thr.txt", "bisect")))
+    assert(new java.io.File(base).list().isEmpty)
+  }
+
+  test("train job: a failed run leaves its features uncached") {
+    def featuresCached = trainFeatures().storageLevel != StorageLevel.NONE
+    // a frame built the same way finds the cache entry of Train.run's
+    val probe = trainFeatures().cache()
+    try assert(featuresCached) finally probe.unpersist()
+    assert(!featuresCached)
+    val base = testDir("train-fail-")
+    // the model cannot be saved under a plain file
+    assert(new java.io.File(s"$base/blocker").createNewFile())
+    intercept[Exception](Train.run(spark, sf, s"$base/blocker/model", s"$base/thr.txt", "kmeans"))
+    assert(!featuresCached, "a failed Train.run left its features cached in the session")
+  }
+
   test("insights job end-to-end: consistent sessions/funnel/retention/value " +
     "reports, deterministic across runs") {
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("insights-").toString
+    val base = testDir("insights-")
     val summary = graft.apps.Insights.run(s, sf, s"$base/run1").head()
     val nEvents = summary.getAs[Long]("n_events")
     // conservation: every event lands in exactly one session

@@ -11,9 +11,6 @@ import graft.stream.IdempotentSink
   * per-batch directory growth. */
 class CompactionSpec extends SparkSuite {
 
-  private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def ls(p: String): Seq[java.io.File] =
     Option(new java.io.File(p).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
 
@@ -33,7 +30,7 @@ class CompactionSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSet
 
   test("flat compact: content preserved, one c-run + one file, batch dirs gone") {
-    val base = tmp("cmp-flat-")
+    val base = testDir("cmp-flat-")
     flatSink(base)
     val before = rows(base)
     assert(before.size == 12)
@@ -54,7 +51,7 @@ class CompactionSpec extends SparkSuite {
   test("flat compact: appends after a fold stay visible and fold on the next pass") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-flat2-")
+    val base = testDir("cmp-flat2-")
     flatSink(base)
     val before = rows(base)
     IdempotentSink.compact(spark, base)
@@ -71,7 +68,7 @@ class CompactionSpec extends SparkSuite {
   test("retry of a batch the fold consumed publishes nothing (manifest memory)") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-retry-")
+    val base = testDir("cmp-retry-")
     flatSink(base)
     val before = rows(base)
     IdempotentSink.compact(spark, base)
@@ -87,7 +84,7 @@ class CompactionSpec extends SparkSuite {
   test("crash before the manifest commits: orphan c-run is invisible and recovered") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-crashA-")
+    val base = testDir("cmp-crashA-")
     flatSink(base)
     val before = rows(base)
     // simulate the first compaction dying between the data rename and
@@ -105,12 +102,12 @@ class CompactionSpec extends SparkSuite {
   }
 
   test("crash after the manifest commits: leftover consumed dirs are excluded, then reclaimed") {
-    val base = tmp("cmp-crashB-")
+    val base = testDir("cmp-crashB-")
     flatSink(base)
     val before = rows(base)
     // stash a batch dir, compact, then restore it — the state a crash
     // between the manifest commit and the cleanup deletes leaves behind
-    val stash = java.nio.file.Files.createTempDirectory("cmp-stash-")
+    val stash = testDir("cmp-stash-")
     def cp(from: java.io.File, to: java.io.File): Unit = {
       if (from.isDirectory) {
         to.mkdirs()
@@ -133,7 +130,7 @@ class CompactionSpec extends SparkSuite {
   test("routed compact: content preserved, Hive cold run, route pruning intact") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-routed-")
+    val base = testDir("cmp-routed-")
     for (b <- 0 until 3)
       IdempotentSink.writeRoutedBatch(
         (0 until 6).map(i => (b * 10L + i, (i % 3).toString))
@@ -178,7 +175,7 @@ class CompactionSpec extends SparkSuite {
   test("auto-compaction policy: flat sink stays under the hot-dir budget across a long append run") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-policy-")
+    val base = testDir("cmp-policy-")
     val maxHot = 2
     var folds = 0
     for (b <- 0 until 9) {
@@ -200,7 +197,7 @@ class CompactionSpec extends SparkSuite {
   test("purge folds even a single-run artifact — bytes provably gone after a takedown") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-purge1-")
+    val base = testDir("cmp-purge1-")
     flatSink(base)
     assert(IdempotentSink.compact(spark, base), "initial fold must commit")
     // the artifact is now ONE cold run; a takedown arriving here must
@@ -223,7 +220,7 @@ class CompactionSpec extends SparkSuite {
   test("vacuous takedown skips the single-run rewrite; a matching one still folds") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-purgevac-")
+    val base = testDir("cmp-purgevac-")
     flatSink(base)
     assert(IdempotentSink.compact(spark, base), "initial fold must commit")
     val coldBefore = dirNames(base).filter(_.matches("c\\d+"))
@@ -246,7 +243,7 @@ class CompactionSpec extends SparkSuite {
   test("routed vacuous takedown skips the single-run rewrite too") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-purgevacr-")
+    val base = testDir("cmp-purgevacr-")
     for (b <- 0 until 2)
       IdempotentSink.writeRoutedBatch(
         Seq((b * 2L, "a"), (b * 2L + 1, "b")).toDF("k", "route"),
@@ -270,7 +267,7 @@ class CompactionSpec extends SparkSuite {
   test("flat purge to zero rows leaves a readable (empty, schema-bearing) artifact") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-purge0-")
+    val base = testDir("cmp-purge0-")
     flatSink(base)
     assert(IdempotentSink.compact(spark, base, purge = Some(_.limit(0))))
     val after = IdempotentSink.read(spark, base)
@@ -287,7 +284,7 @@ class CompactionSpec extends SparkSuite {
   test("routed purge to zero rows commits a manifest with NO run — artifact not bricked") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-purge0r-")
+    val base = testDir("cmp-purge0r-")
     for (b <- 0 until 2)
       IdempotentSink.writeRoutedBatch(
         Seq((b * 2L, "a"), (b * 2L + 1, "b")).toDF("k", "route"),
@@ -320,7 +317,7 @@ class CompactionSpec extends SparkSuite {
   test("auto-compaction policy: routed sink counts hot dirs across routes") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-policyr-")
+    val base = testDir("cmp-policyr-")
     // each batch touches 2 routes -> 2 hot dirs per batch
     for (b <- 0 until 4) {
       IdempotentSink.writeRoutedBatch(
@@ -342,7 +339,7 @@ class CompactionSpec extends SparkSuite {
     "backfill; committed bytes untouched (cs17's contract)") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-evo-")
+    val base = testDir("cmp-evo-")
     IdempotentSink.writeBatch(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), base, 0)
     val b0Files = ls(s"$base/b0").filter(_.getName.endsWith(".parquet"))
       .map(f => (f.getName, f.length, f.lastModified)).sorted
@@ -364,7 +361,7 @@ class CompactionSpec extends SparkSuite {
     "columns survive the rewrite with nulls materialized") {
     val s = spark
     import s.implicits._
-    val base = tmp("cmp-evo2-")
+    val base = testDir("cmp-evo2-")
     IdempotentSink.writeBatch(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), base, 0)
     IdempotentSink.writeBatch(
       Seq((3L, "c", 30L)).toDF("k", "v", "extra"), base, 1)

@@ -39,7 +39,7 @@ class DedupSpec extends SparkSuite {
     val docs = graft.model.Tables.documents(s, sf).select($"doc_id", $"text")
     val hist = docs.filter(!($"doc_id" % 4 === 3))
     val batch = docs.filter($"doc_id" % 4 === 3)
-    val dir = java.nio.file.Files.createTempDirectory("lsh-idx-").toString
+    val dir = testDir("lsh-idx-")
     Dedup.lshBandIndex(hist, "doc_id", "text",
         shingleK = 3, numBands = 8, rowsPerBand = 4)
       .write.mode("overwrite").parquet(dir)
@@ -62,7 +62,7 @@ class DedupSpec extends SparkSuite {
     import s.implicits._
     val docs = graft.model.Tables.documents(s, sf)
       .select($"doc_id", $"text").limit(20)
-    val dir = java.nio.file.Files.createTempDirectory("lsh-idx-params-").toString
+    val dir = testDir("lsh-idx-params-")
     Dedup.writeLshBandIndex(docs, "doc_id", "text", dir,
       shingleK = 3, numBands = 8, rowsPerBand = 4)
     // matching parameters load fine and see the band rows
@@ -88,7 +88,7 @@ class DedupSpec extends SparkSuite {
     val hist = (0L until 2000L).map(i => (i, txt(i))).toDF("doc_id", "text")
     val batch = Seq((9001L, txt(7)), (9002L, txt(777777L)))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lsh-idx-prune-").toString
+    val dir = testDir("lsh-idx-prune-")
     Dedup.writeLshBandIndex(hist, "doc_id", "text", dir,
       shingleK = 3, numBands = 8, rowsPerBand = 4)
     val bands = Dedup.readLshBandIndex(s, dir, 3, 8, 4)
@@ -154,7 +154,7 @@ class DedupSpec extends SparkSuite {
     val hist = (0L until 300L).map(i => (i, txt(i))).toDF("doc_id", "text")
     val batch = Seq((9001L, txt(7)), (9002L, txt(888888L)))
       .toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("lsh-cmp-").toString
+    val base = testDir("lsh-cmp-")
     // two streaming-style appends in st29's routed per-bucket layout
     Seq(hist.filter($"doc_id" % 2 === 0), hist.filter($"doc_id" % 2 === 1))
       .zipWithIndex.foreach { case (h, b) =>
@@ -212,7 +212,7 @@ class DedupSpec extends SparkSuite {
     // corpus persisted one directory per id bucket — the artifact layout
     // a streaming ingest loop maintains so partner text is a point
     // lookup instead of a full-history scan
-    val dir = java.nio.file.Files.createTempDirectory("corpus-bkt-").toString
+    val dir = testDir("corpus-bkt-")
     hist.withColumn("b", pmod(hash($"doc_id"), lit(Dedup.BandBuckets)))
       .write.partitionBy("b").mode("overwrite").parquet(dir)
     var loaderBuckets = -1
@@ -249,7 +249,7 @@ class DedupSpec extends SparkSuite {
     import s.implicits._
     val docs = graft.model.Tables.documents(s, sf)
       .select($"doc_id", $"text").limit(20)
-    val dir = java.nio.file.Files.createTempDirectory("lsh-idx-bb-").toString
+    val dir = testDir("lsh-idx-bb-")
     Dedup.writeLshBandIndex(docs, "doc_id", "text", dir,
       shingleK = 3, numBands = 8, rowsPerBand = 4)
     assert(Dedup.readLshBandIndex(s, dir, 3, 8, 4).count() > 0)
@@ -543,8 +543,7 @@ class DedupSpec extends SparkSuite {
     "explicit quantizerKey opts out") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stale-ivf")
-      .toFile.getAbsolutePath
+    val dir = testDir("graft-stale-ivf")
     def writeCorpus(shift: Int): Unit =
       (0 until 300).map { i =>
         (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 3 + shift) % 13).toFloat))
@@ -635,7 +634,7 @@ class DedupSpec extends SparkSuite {
     assert(local.collect().length == 2)
     assert(local.queryExecution.optimizedPlan.isInstanceOf[
       org.apache.spark.sql.execution.LogicalRDD])
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
+    val ckpt = testDir("graft-ckpt-")
     try {
       s.conf.set(graft.ops.Lineage.CheckpointDirConf, ckpt)
       val reliable = graft.ops.Lineage.cut(df)
@@ -645,13 +644,7 @@ class DedupSpec extends SparkSuite {
         f.isFile || Option(f.listFiles()).getOrElse(Array.empty).exists(anyFiles)
       assert(anyFiles(new java.io.File(ckpt)),
         "reliable checkpoint must write blocks under the configured root")
-    } finally {
-      s.conf.unset(graft.ops.Lineage.CheckpointDirConf)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
-      }
-      rm(new java.io.File(ckpt))
-    }
+    } finally s.conf.unset(graft.ops.Lineage.CheckpointDirConf)
   }
 
   test("minHashDupPairsWithIndex with a precomputed newBloom emits the " +

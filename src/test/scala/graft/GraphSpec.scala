@@ -84,40 +84,32 @@ class GraphSpec extends SparkSuite {
   }
 
   test("reliable checkpoint and co-partitioned join paths match the default") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-spec-").toString
-    try {
-      def run(ckpt: Option[String], bcast: Boolean) =
-        Graph.pageRankInt(pairs, iters = 2, checkpointDir = ckpt,
-            broadcastRanks = bcast)
-          .orderBy(col("item")).collect().toSeq
-      val default = run(None, bcast = true)
-      // reliable checkpoint() must write RDD blocks under the configured
-      // root AND leave the integer ranks bit-identical
-      assert(run(Some(dir), bcast = true) == default,
-        "reliable-checkpoint path changed pageRank output")
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(wrote > 0, "checkpointDir was configured but no blocks were written")
-      // the non-broadcast (co-partitioned) join path is the same recurrence
-      assert(run(None, bcast = false) == default,
-        "co-partitioned join path changed pageRank output")
-      // BFS through the reliable path too
-      val edges = pairs.filter(col("w") >= 2).select(col("item_a"), col("item_b"))
-      val src = edges.agg(least(min(col("item_a")), min(col("item_b"))))
-        .head().getLong(0)
-      val bfsA = Graph.bfsHops(edges, src, maxHops = 2)
-        .orderBy(col("node")).collect().toSeq
-      val bfsB = Graph.bfsHops(edges, src, maxHops = 2, checkpointDir = Some(dir))
-        .orderBy(col("node")).collect().toSeq
-      assert(bfsA.nonEmpty && bfsA == bfsB,
-        "reliable-checkpoint path changed BFS output")
-    } finally {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
-        f.delete(): Unit
-      }
-      del(new java.io.File(dir))
-    }
+    val dir = testDir("graft-ckpt-spec-")
+    def run(ckpt: Option[String], bcast: Boolean) =
+      Graph.pageRankInt(pairs, iters = 2, checkpointDir = ckpt,
+          broadcastRanks = bcast)
+        .orderBy(col("item")).collect().toSeq
+    val default = run(None, bcast = true)
+    // reliable checkpoint() must write RDD blocks under the configured
+    // root AND leave the integer ranks bit-identical
+    assert(run(Some(dir), bcast = true) == default,
+      "reliable-checkpoint path changed pageRank output")
+    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(java.nio.file.Files.isRegularFile(_)).count()
+    assert(wrote > 0, "checkpointDir was configured but no blocks were written")
+    // the non-broadcast (co-partitioned) join path is the same recurrence
+    assert(run(None, bcast = false) == default,
+      "co-partitioned join path changed pageRank output")
+    // BFS through the reliable path too
+    val edges = pairs.filter(col("w") >= 2).select(col("item_a"), col("item_b"))
+    val src = edges.agg(least(min(col("item_a")), min(col("item_b"))))
+      .head().getLong(0)
+    val bfsA = Graph.bfsHops(edges, src, maxHops = 2)
+      .orderBy(col("node")).collect().toSeq
+    val bfsB = Graph.bfsHops(edges, src, maxHops = 2, checkpointDir = Some(dir))
+      .orderBy(col("node")).collect().toSeq
+    assert(bfsA.nonEmpty && bfsA == bfsB,
+      "reliable-checkpoint path changed BFS output")
   }
 
   test("per-round shuffle is node-sized in BOTH join modes — edges shuffle " +

@@ -128,20 +128,18 @@ class IngestSpec extends SparkSuite {
   test("a fixed-path fixture asked for dir A, then B, then A holds A's data") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val b = java.nio.file.Files.createTempDirectory("ingest-b-")
-    try {
-      graft.model.Tables.lineitem(s, sf).filter(col("l_orderkey") % 2 === 0)
-        .write.parquet(b.resolve("lineitem.parquet").toString)
-      def orcRows(dir: String) = {
-        assert(IngestQueries.ensureOrc(s, dir) == IngestQueries.orcDir)
-        s.read.orc(IngestQueries.orcDir).count()
-      }
-      val a = graft.model.Tables.lineitem(s, sf).count()
-      val bRows = graft.model.Tables.lineitem(s, b.toString).count()
-      assert(bRows < a)
-      assert(orcRows(sf) == a)
-      assert(orcRows(b.toString) == bRows)
-      assert(orcRows(sf) == a, "the fixture must be rebuilt for A, not left at B")
-    } finally graft.stream.StreamRunner.deleteRecursively(b.toFile)
+    val b = java.nio.file.Paths.get(testDir("ingest-b-"))
+    graft.model.Tables.lineitem(s, sf).filter(col("l_orderkey") % 2 === 0)
+      .write.parquet(b.resolve("lineitem.parquet").toString)
+    def orcRows(dir: String) = {
+      assert(IngestQueries.ensureOrc(s, dir) == IngestQueries.orcDir)
+      s.read.orc(IngestQueries.orcDir).count()
+    }
+    val a = graft.model.Tables.lineitem(s, sf).count()
+    val bRows = graft.model.Tables.lineitem(s, b.toString).count()
+    assert(bRows < a)
+    assert(orcRows(sf) == a)
+    assert(orcRows(b.toString) == bRows)
+    assert(orcRows(sf) == a, "the fixture must be rebuilt for A, not left at B")
   }
 }

@@ -30,16 +30,20 @@ class MlSpec extends SparkSuite {
     assert(withNull.isNullAt(0), s"null element must null the result, got $withNull")
   }
 
-  test("k-sweep: fitting every k at once gives each k's lone fit, bit for bit") {
+  /** Four blobs in 3-d, spread over several partitions. */
+  private lazy val blobs = {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(11)
-    // four blobs in 3-d, spread over several partitions
     val rows = (0 until 400).map { i =>
       val c = i % 4 * 10.0
       (c + rnd.nextGaussian(), -c + rnd.nextGaussian(), rnd.nextGaussian() * 3)
     }
-    val df = Training.assemble(rows.toDF("a", "b", "c").repartition(3), Seq("a", "b", "c"))
+    Training.assemble(rows.toDF("a", "b", "c").repartition(3), Seq("a", "b", "c"))
+  }
+
+  test("k-sweep: fitting every k at once gives each k's lone fit, bit for bit") {
+    val df = blobs
     val together = Training.kMeansSweep(df, 2 to 6)
     assert(together.map(_._1) == (2 to 6))
     together.foreach { case (k, model, cost) =>
@@ -51,14 +55,61 @@ class MlSpec extends SparkSuite {
     }
   }
 
+  private val elbowKs = 2 to 10
+  private lazy val fullSweep = Training.kMeansSweep(blobs, elbowKs)
+
+  /** The elbow sweep at `width` and `ratio` against the full sweep +
+    * `elbowSelection`: the same k, cost and centers, bit for bit, and the
+    * fits made are a k-ordered prefix of the full sweep's. Returns the
+    * number of fits made. */
+  private def elbowFits(ratio: Double, width: Int): Int = {
+    val (k, model, cost) = fullSweep(Training.elbowSelection(fullSweep.map(_._3), ratio))
+    val fits = Training.elbowSweep(blobs, elbowKs, ratio)(Training.kMeansFit(), width)
+    assert(fits.map(_._1) == elbowKs.take(fits.size))
+    val (k1, model1, cost1) = fits(Training.elbowSelection(fits.map(_._3), ratio))
+    assert(k1 == k, s"width $width: elbow sweep picked k=$k1, the full sweep k=$k")
+    assert(cost1 == cost, s"k=$k: elbow sweep cost $cost1, full sweep cost $cost")
+    assert(model1.clusterCenters.toSeq == model.clusterCenters.toSeq,
+      s"k=$k: centers differ between the elbow sweep and the full sweep")
+    fits.size
+  }
+
+  /** Index of the full sweep's elbow at the job's ratio; the cases below
+    * need one with a ratio on either side of it. */
+  private lazy val elbow = {
+    val e = Training.firstElbow(fullSweep.map(_._3), 0.7)
+    assert(e.exists(i => i >= 2 && 2 * i < elbowKs.size),
+      s"the blobs' costs ${fullSweep.map(_._3)} have no elbow in the middle of the sweep")
+    e.get
+  }
+
+  test("elbow sweep: an elbow whose ratio spans two rounds stops after the second") {
+    // rounds of `elbow` fits: cost(elbow - 1) closes the first round,
+    // cost(elbow) opens the second
+    assert(elbowFits(0.7, width = elbow) == 2 * elbow)
+  }
+
+  test("elbow sweep: rounds of one stop at the elbow's k; one round fits every k") {
+    assert(elbowFits(0.7, width = 1) == elbow + 1)
+    assert(elbowFits(0.7, width = elbowKs.size) == elbowKs.size)
+    assert(elbowFits(0.7, width = 100) == elbowKs.size)
+  }
+
+  test("elbow sweep: with no elbow every k is fitted and the last is picked") {
+    assert(Training.firstElbow(fullSweep.map(_._3), Double.PositiveInfinity).isEmpty)
+    assert(elbowFits(Double.PositiveInfinity, width = 4) == elbowKs.size)
+    assert(Training.elbowSelection(fullSweep.map(_._3), Double.PositiveInfinity) ==
+      elbowKs.size - 1)
+  }
+
   test("threshold artifact round-trips through the text file") {
-    val p = java.nio.file.Files.createTempDirectory("thr-").toString + "/threshold.txt"
+    val p = testDir("thr-") + "/threshold.txt"
     Persistence.saveThreshold(p, 123.456)
     assert(Persistence.loadThreshold(p) == 123.456)
   }
 
   test("threshold artifact round-trips through a file: URI on its Hadoop FileSystem") {
-    val dir = java.nio.file.Files.createTempDirectory("thr-uri-").toString
+    val dir = testDir("thr-uri-")
     val uri = s"file:$dir/model/threshold.txt"
     Persistence.saveThreshold(uri, 0.1 + 0.2) // a double with no short decimal form
     assert(Persistence.loadThreshold(uri) == 0.1 + 0.2)

@@ -45,26 +45,24 @@ class PruningSpec extends SparkSuite {
 
   test("a source rewritten in place rebuilds the partitioned layout") {
     val s = spark
-    val src = java.nio.file.Files.createTempDirectory("pruning-src-")
+    val src = java.nio.file.Paths.get(testDir("pruning-src-"))
     val events = src.resolve("events.parquet")
-    try {
-      java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "events.parquet"), events)
-      val path = EventQueries.ensurePartitionedEvents(s, src.toString)
-      val full = graft.model.Tables.events(s, sf).count()
-      assert(s.read.parquet(path).count() == full)
-      // rewrite events.parquet in place with half the rows
-      val half = src.resolve("half")
-      graft.model.Tables.table(s, src.toString, "events")
-        .filter(col("event_id") % 2 === 0).coalesce(1).write.parquet(half.toString)
-      val part = half.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath, events,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val kept = graft.model.Tables.events(s, src.toString).count()
-      assert(kept < full)
-      assert(EventQueries.ensurePartitionedEvents(s, src.toString) == path)
-      assert(s.read.parquet(path).count() == kept,
-        "the layout must be rebuilt from the rewritten events")
-      graft.stream.StreamRunner.deleteRecursively(new java.io.File(path))
-    } finally graft.stream.StreamRunner.deleteRecursively(src.toFile)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "events.parquet"), events)
+    val path = EventQueries.ensurePartitionedEvents(s, src.toString)
+    val full = graft.model.Tables.events(s, sf).count()
+    assert(s.read.parquet(path).count() == full)
+    // rewrite events.parquet in place with half the rows
+    val half = src.resolve("half")
+    graft.model.Tables.table(s, src.toString, "events")
+      .filter(col("event_id") % 2 === 0).coalesce(1).write.parquet(half.toString)
+    val part = half.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, events,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val kept = graft.model.Tables.events(s, src.toString).count()
+    assert(kept < full)
+    assert(EventQueries.ensurePartitionedEvents(s, src.toString) == path)
+    assert(s.read.parquet(path).count() == kept,
+      "the layout must be rebuilt from the rewritten events")
+    graft.stream.StreamRunner.deleteRecursively(new java.io.File(path))
   }
 }

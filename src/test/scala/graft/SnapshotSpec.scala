@@ -10,9 +10,6 @@ import graft.stream.VersionedSnapshot
   * full snapshots and st36's in-stream retention. */
 class SnapshotSpec extends SparkSuite {
 
-  private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def names(p: String): Set[String] =
     Option(new java.io.File(p).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
       .filter(_.isDirectory).map(_.getName).toSet
@@ -20,7 +17,7 @@ class SnapshotSpec extends SparkSuite {
   test("publish commits atomically, latest resolves, staging is invisible") {
     val s = spark
     import s.implicits._
-    val base = tmp("snap-")
+    val base = testDir("snap-")
     assert(VersionedSnapshot.latestId(s, base).isEmpty)
     for (i <- 0L until 3L)
       VersionedSnapshot.publish(Seq((i, s"s$i")).toDF("k", "v"), base, i)
@@ -36,7 +33,7 @@ class SnapshotSpec extends SparkSuite {
   test("committed versions are immutable under at-least-once republish") {
     val s = spark
     import s.implicits._
-    val base = tmp("snap-imm-")
+    val base = testDir("snap-imm-")
     VersionedSnapshot.publish(Seq((1L, "real")).toDF("k", "v"), base, 0L)
     VersionedSnapshot.publish(Seq((666L, "retry-with-different-rows"))
       .toDF("k", "v"), base, 0L)
@@ -48,7 +45,7 @@ class SnapshotSpec extends SparkSuite {
   test("lost publish race: nested v<id>/v<id> junk is repaired on retry, winner intact") {
     val s = spark
     import s.implicits._
-    val base = tmp("snap-race-")
+    val base = testDir("snap-race-")
     VersionedSnapshot.publish(Seq((1L, "winner")).toDF("k", "v"), base, 0L)
     // simulate the loser's footprint: a concurrent publisher that passed
     // the existence checks renames its staging UNDER the winner's
@@ -69,7 +66,7 @@ class SnapshotSpec extends SparkSuite {
   test("readAt: immutable under later publishes, and pruned versions fail fast") {
     val s = spark
     import s.implicits._
-    val base = tmp("snap-asof-")
+    val base = testDir("snap-asof-")
     for (i <- 0L until 3L)
       VersionedSnapshot.publish(Seq((i, s"s$i")).toDF("k", "v"), base, i)
     // pin v1, then publish two more versions while it is held
@@ -95,7 +92,7 @@ class SnapshotSpec extends SparkSuite {
   test("retain keeps the newest k, deletes the rest, and converges after a crash") {
     val s = spark
     import s.implicits._
-    val base = tmp("snap-ret-")
+    val base = testDir("snap-ret-")
     for (i <- 0L until 5L)
       VersionedSnapshot.publish(Seq((i, s"s$i")).toDF("k", "v"), base, i)
     val dropped = VersionedSnapshot.retain(s, base, keep = 2)
@@ -136,7 +133,7 @@ class SnapshotSpec extends SparkSuite {
   test("lost-race junk is repaired on READ — no retry needed, winner intact") {
     val s = spark
     import s.implicits._
-    val base = tmp("snap-readheal-")
+    val base = testDir("snap-readheal-")
     VersionedSnapshot.publish(Seq((1L, "winner")).toDF("k", "v"), base, 0L)
     // the loser's footprint under the committed dir, loser never retries
     Seq((666L, "loser")).toDF("k", "v")
@@ -152,7 +149,7 @@ class SnapshotSpec extends SparkSuite {
   test("publish leaves no staging residue (per-attempt dirs are cleaned)") {
     val s = spark
     import s.implicits._
-    val base = tmp("snap-stage-")
+    val base = testDir("snap-stage-")
     for (i <- 0L until 2L)
       VersionedSnapshot.publish(Seq((i, s"s$i")).toDF("k", "v"), base, i)
     // a committed-version retry (staged then discarded) also cleans up
@@ -165,7 +162,7 @@ class SnapshotSpec extends SparkSuite {
   test("readChanges: genesis ≡ readAt(latest), append-only delta is exactly the appended batches") {
     val s = spark
     import s.implicits._
-    val base = tmp("snap-cdc-")
+    val base = testDir("snap-cdc-")
     // append-only per-batch publisher: version k = batches 0..k unioned
     def rowsOf(b: Long) = Seq((b * 10L, s"b$b"), (b * 10L + 1, s"b$b"))
     var acc = Seq.empty[(Long, String)]
@@ -189,7 +186,7 @@ class SnapshotSpec extends SparkSuite {
   test("readChanges: an update surfaces as its delete+insert pair; pruned endpoints fail fast") {
     val s = spark
     import s.implicits._
-    val base = tmp("snap-cdc2-")
+    val base = testDir("snap-cdc2-")
     VersionedSnapshot.publish(Seq((1L, "old"), (2L, "same")).toDF("k", "v"), base, 0L)
     VersionedSnapshot.publish(Seq((1L, "new"), (2L, "same")).toDF("k", "v"), base, 1L)
     val ch = VersionedSnapshot.readChanges(s, base, 0L, 1L).collect()
@@ -214,7 +211,7 @@ class SnapshotSpec extends SparkSuite {
     "two-session consume equals the one-shot maintenance") {
     val s = spark
     import s.implicits._
-    val up = tmp("snap-ivm-up-")
+    val up = testDir("snap-ivm-up-")
     // upstream merge publisher with an UPDATE (k=1 changes value) so the
     // consumer must net a delete+insert pair, not just apply inserts
     VersionedSnapshot.publish(Seq((1L, 10L), (2L, 5L)).toDF("k", "x"), up, 0L)
@@ -245,9 +242,9 @@ class SnapshotSpec extends SparkSuite {
     def viewOf(down: String) = VersionedSnapshot
       .readAt(s, down, VersionedSnapshot.latestId(s, down).get)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val oneShot = tmp("snap-ivm-a-")
+    val oneShot = testDir("snap-ivm-a-")
     Seq(0L, 1L, 2L).foreach(step(oneShot, _))
-    val twoSession = tmp("snap-ivm-b-")
+    val twoSession = testDir("snap-ivm-b-")
     step(twoSession, 0L) // session one ends after version 0
     // session two: fresh loop over every upstream version; the resume
     // point comes from the downstream artifact, and re-stepping the

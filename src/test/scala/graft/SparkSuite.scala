@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for specs — one JVM-wide session, small local parallelism. */
@@ -13,13 +16,29 @@ object SparkSuite {
   val Sf = "/root/testdata/sf0.001"
 }
 
-abstract class SparkSuite extends AnyFunSuite {
+abstract class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkSuite.spark
     s.sparkContext.setLogLevel("WARN")
     s
   }
   def sf: String = SparkSuite.Sf
+
+  private val testDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** A fresh directory `target/test-dirs/<prefix>…` for a test's files;
+    * every one a suite makes is deleted after the suite, so no run leaves
+    * its files behind in the system temp dir. */
+  protected def testDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(
+      Files.createDirectories(Paths.get("target/test-dirs").toAbsolutePath), prefix).toString
+    testDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try testDirs.forEach(dir => graft.stream.StreamRunner.deleteRecursively(new java.io.File(dir)))
+    finally super.afterAll()
 
   /** Total shuffle-write records observed while `body` runs (listener-bus
     * events are async, so poll until the counter is stable). Shared by

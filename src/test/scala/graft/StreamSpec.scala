@@ -161,7 +161,7 @@ class StreamSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("ckpt-spec-").toString
+    val base = testDir("ckpt-spec-")
     val input = MemoryStream[PurchaseLine]
     def start() = InvoiceStateMachine(input.toDS(), idleTimeoutMs = 0L)
       .toDF()
@@ -347,7 +347,7 @@ class StreamSpec extends SparkSuite {
   test("routed-batch retry after full commit re-processes but publishes NOTHING") {
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("routed-retry-").toString
+    val base = testDir("routed-retry-")
     val df = Seq(("1", "good"), ("2", "bad")).toDF("v", "route")
     graft.stream.IdempotentSink.writeRoutedBatch(df, base, "route", batchId = 3)
     def goodVals() = graft.stream.IdempotentSink.read(s, s"$base/good")
@@ -393,7 +393,7 @@ class StreamSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getString(2))).toSet
     assert(routes == Set(("1", "good"), ("C2", "cancelled"),
       ("3", "invalid"), ("4", "invalid")) + (("C2", "cancelled")))
-    val base = java.nio.file.Files.createTempDirectory("router-spec-").toString
+    val base = testDir("router-spec-")
     Router.runToSinks(StreamRunner.asStream(recs), base)
     val good = graft.stream.IdempotentSink.read(s, s"$base/good").collect()
     val cancelled = graft.stream.IdempotentSink.read(s, s"$base/cancelled").collect()
@@ -888,7 +888,7 @@ class StreamSpec extends SparkSuite {
     // itself is not the suspect.
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("wmlag").toString
+    val dir = testDir("wmlag")
     def t(h: Int): java.sql.Timestamp =
       java.sql.Timestamp.valueOf(f"2026-01-${1 + h / 24}%02d ${h % 24}%02d:30:00")
     // 1 h windows, 1 h delay. Chunk maxes 100h/110h/120h ⇒ candidate
@@ -1009,7 +1009,7 @@ class StreamSpec extends SparkSuite {
     * be stopped, maintained, and resumed mid-replay (mtimes preserved —
     * the deterministic batch-order contract of the chunk fixtures). */
   private def progressiveScratch(src: String): (String, Int => Unit) = {
-    val scratch = java.nio.file.Files.createTempDirectory("resume-").toString
+    val scratch = testDir("resume-")
     val add = (c: Int) => {
       val s0 = new java.io.File(s"$src/chunk_$c.parquet")
       val dst = new java.io.File(s"$scratch/chunk_$c.parquet")
@@ -1025,7 +1025,7 @@ class StreamSpec extends SparkSuite {
     val chunks = graft.queries.StreamQueries.ensureDocChunks(s, sf, 3)
     val (scratch, add) = progressiveScratch(chunks)
     add(0); add(1)
-    val base = java.nio.file.Files.createTempDirectory("st29-cmp-").toString
+    val base = testDir("st29-cmp-")
     graft.queries.StreamQueries.runLshDedupStream(s, scratch, base)
     // maintenance window between crawl days: fold EVERY accumulated
     // artifact — the routed band index and the three flat sinks
@@ -1040,7 +1040,7 @@ class StreamSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val resumed = keepers(base)
     // reference: one uninterrupted, never-compacted replay
-    val base2 = java.nio.file.Files.createTempDirectory("st29-ref-").toString
+    val base2 = testDir("st29-ref-")
     graft.queries.StreamQueries.runLshDedupStream(s, chunks, base2)
     val oneShot = keepers(base2)
     assert(resumed == oneShot && resumed.nonEmpty,
@@ -1058,7 +1058,7 @@ class StreamSpec extends SparkSuite {
     val chunks = graft.queries.StreamQueries.ensureEmbChunks(s, sf, 3)
     val (scratch, add) = progressiveScratch(chunks)
     add(0); add(1)
-    val base = java.nio.file.Files.createTempDirectory("st34-cmp-").toString
+    val base = testDir("st34-cmp-")
     val idxDir = s"$base/assignments"
     def run(): Unit = {
       val q = s.readStream.schema(graft.model.Schemas.embeddings)
@@ -1101,7 +1101,7 @@ class StreamSpec extends SparkSuite {
     val chunks = graft.queries.StreamQueries.ensureEmbChunks(s, sf, 3)
     val (scratch, add) = progressiveScratch(chunks)
     add(0); add(1)
-    val base = java.nio.file.Files.createTempDirectory("st40-cmp-").toString
+    val base = testDir("st40-cmp-")
     val codesDir = s"$base/pq_codes"
     def run(): Unit = {
       val q = s.readStream.schema(graft.model.Schemas.embeddings)
@@ -1143,7 +1143,7 @@ class StreamSpec extends SparkSuite {
     val chunks = graft.queries.StreamQueries.ensureDocChunks(s, sf, 3)
     val (scratch, add) = progressiveScratch(chunks)
     add(0); add(1)
-    val base = java.nio.file.Files.createTempDirectory("snap-restart-").toString
+    val base = testDir("snap-restart-")
     val vbase = s"$base/view"
     // the st41 publisher shape: every run is a FRESH closure with no
     // carried driver state — the r20 self-review fix this test pins
@@ -1197,7 +1197,7 @@ class StreamSpec extends SparkSuite {
     val hist = histVecs.toDF("vec_id", "embedding")
     val centers = graft.ops.Similarity.coarseQuantizer(
       hist, "vec_id", "embedding", "st35-spec", nCells = 256, seed = 7L)
-    val base = java.nio.file.Files.createTempDirectory("st35-probe-").toString
+    val base = testDir("st35-probe-")
     graft.queries.StreamQueries.semanticDedupBatch(hist, 0L, base, centers)
     val indexRows = graft.stream.IdempotentSink
       .readRouted(s, s"$base/cellindex", "cell_route").get.count()
