@@ -78,6 +78,6 @@ object Train {
       println(s"[train] algo=$algo selectedK=$selectedK fits=$fitted/${ks.size} " +
         s"threshold=$threshold -> $modelDir, $thresholdFile")
       (selectedK, threshold)
-    } finally feats.unpersist(): Unit
+    } finally feats.unpersist(blocking = true): Unit
   }
 }

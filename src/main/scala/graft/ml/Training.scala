@@ -69,7 +69,7 @@ object Training {
         fits ++= graft.ops.Actions.awaitAll(
           rounds.next().map(k => () => { val (m, cost) = fit(sorted, k); (k, m, cost) }))
       fits
-    } finally sorted.unpersist(): Unit
+    } finally sorted.unpersist(blocking = true): Unit
   }
 
   /** k-sweep KMeans training: fit one model per k, all at once, and
