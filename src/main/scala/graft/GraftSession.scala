@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: every main and the test suite build
@@ -29,6 +31,20 @@ object GraftSession {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.graft.textMetaRewrite" -> "true",
     "spark.sql.adaptive.enabled" -> "true")
+
+  /** The Hadoop settings of `spark`'s session for the repo's own
+    * file-system calls: the context's plus every session conf entry, as
+    * Spark's own reads and writes on that session see them. A
+    * `foreachBatch` body's session is its stream's clone, so a sink's
+    * checks and renames see what the stream captured at start (e.g.
+    * [[graft.stream.LocalFs.conf]]). Only `Lineage` reads the context's
+    * `sparkContext.hadoopConfiguration` instead: the RDD checkpoint dir
+    * is context state (GraftSessionSpec keeps it that way). */
+  def hadoopConf(spark: SparkSession): Configuration = spark.sessionState.newHadoopConf()
+
+  /** The `FileSystem` of `path` under [[hadoopConf]]. */
+  def fileSystem(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(hadoopConf(spark))
 
   def apply(appName: Option[String] = None,
             master: String = sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"),

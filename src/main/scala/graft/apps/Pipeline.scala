@@ -78,19 +78,25 @@ object Pipeline {
     * factored out so the end-to-end spec drives the same code.
     *
     * Start order: the router starts first, and the two models and
-    * thresholds load on the calling thread while it drains; the cancel
-    * and anomaly queries start after the loads (in `once` mode, after the
-    * router has drained, so they snapshot every staged batch — three
-    * `AvailableNow` queries back-to-back; in continuous mode all three
-    * run concurrently and the staged routes ride one trigger behind).
-    * A failed load stops the started router before rethrowing.
+    * thresholds load while it drains, concurrently through
+    * [[graft.ops.Actions.awaitAll]] (one task per model and its
+    * threshold). The anomaly query starts after the loads, then the
+    * cancel query: in `once` mode both start after the router has
+    * drained, so they snapshot every staged batch, and the anomaly
+    * query, the longer of the two, starts first. In continuous mode all
+    * three run concurrently and the staged routes ride one trigger
+    * behind. A failed load stops the started router before rethrowing.
+    * The queries come back as (router, cancel, anomaly).
     *
     * Each `foreachBatch` publishes its sinks concurrently through
     * [[graft.ops.Actions.awaitAll]] (the router's three, the anomaly
     * query's two), each an [[IdempotentSink.writeBatch]] of its own: the
     * router's sinks differ in schema, so one routed `partitionBy` write
     * ([[IdempotentSink.writeRoutedBatch]]) would add a column to
-    * `facturas_erroneas`. */
+    * `facturas_erroneas`. The router's per-batch distinct of cancelled
+    * keys runs on one partition: a batch holds few of them, and one
+    * partition already satisfies the distinct's clustering, so it needs
+    * no shuffle. */
   def run(spark: SparkSession, recordsDir: String, kmDir: String, kmThr: String,
           bisDir: String, bisThr: String, outDir: String,
           once: Boolean): Seq[StreamingQuery] = {
@@ -99,7 +105,7 @@ object Pipeline {
     val staged = s"$outDir/_staged"
     // through the Hadoop FileSystem of outDir, as IdempotentSink writes
     // (java.io.File would make a local `hdfs:/...` tree for a remote one)
-    val fs = new Path(staged).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftSession.fileSystem(spark, new Path(staged))
     Seq(s"$staged/cancelled", s"$staged/good").foreach(d => fs.mkdirs(new Path(d)))
     // every query starts on ONE state partition (one store per stateful
     // operator, so one commit per operator per trigger; why 1, and why
@@ -137,10 +143,10 @@ object Pipeline {
         publish(batch)(
           routed => IdempotentSink.writeBatch(routed.filter(col("route") === "invalid")
             .select(col("key"), col("value")), s"$outDir/facturas_erroneas", batchId),
-          // per-batch distinct (A2, ref :68-71) + arrival timestamp for
-          // the processing-time window
+          // per-batch distinct (A2, ref :68-71) on one partition, so no
+          // shuffle + arrival timestamp for the processing-time window
           routed => IdempotentSink.writeBatch(graft.stream.CancellationWindow.perBatchDistinct(
-              routed.filter(col("route") === "cancelled").select(col("key")), "key")
+              routed.filter(col("route") === "cancelled").select(col("key")).coalesce(1), "key")
             .withColumn("ts", current_timestamp()), s"$staged/cancelled", batchId),
           routed => IdempotentSink.writeBatch(routed.filter(col("route") === "good")
             .select(col("key"), col("value")), s"$staged/good", batchId))
@@ -148,16 +154,39 @@ object Pipeline {
       .option("checkpointLocation", s"$outDir/_checkpoints/route")
       .trigger(trigger))
 
-    // models + thresholds load once on the driver (ref :46-47) while the
-    // router drains; centers enter the plans as literals (broadcast with
-    // the plan). A failed load stops the router, so none is left running.
-    val (kmCenters, kmThreshold, bisCenters, bisThreshold) =
-      try (KMeansModel.load(kmDir).clusterCenters.map(_.toArray.toSeq).toSeq,
-        Persistence.loadThreshold(kmThr),
-        BisectingKMeansModel.load(bisDir).clusterCenters.map(_.toArray.toSeq).toSeq,
-        Persistence.loadThreshold(bisThr))
+    // models + thresholds load once on the driver (ref :46-47), both at
+    // once, while the router drains; centers enter the plans as literals
+    // (broadcast with the plan). A failed load stops the router, so none
+    // is left running.
+    val Seq((kmCenters, kmThreshold), (bisCenters, bisThreshold)) =
+      try Actions.awaitAll(Seq(
+        () => (KMeansModel.load(kmDir).clusterCenters.map(_.toArray.toSeq).toSeq,
+          Persistence.loadThreshold(kmThr)),
+        () => (BisectingKMeansModel.load(bisDir).clusterCenters.map(_.toArray.toSeq).toSeq,
+          Persistence.loadThreshold(bisThr))))
       catch { case NonFatal(e) => qRoute.stop(); throw e }
     if (once) qRoute.awaitTermination() // drain before the consumers snapshot
+
+    // F4 + P7 + A4 + F5 + P9: staged good lines → typed purchases → ONE
+    // stateful invoice aggregate, scored against BOTH models in the same
+    // foreachBatch (scoring is stateless column math over the emitted
+    // updates — it needs no second state store or source scan). It starts
+    // before the cancel query: it is the longer of the two.
+    val purchases = toPurchaseLines(PurchaseCsv.parseLines(
+      spark.readStream.schema(Schemas.kafkaRecord).parquet(s"$staged/good/b*").select($"value")))
+    val idleMs = if (once) 0L else 20000L // delete-on-idle ≈ one trigger
+    val qAnomalies = start(InvoiceStateMachine(purchases, idleTimeoutMs = idleMs).toDF()
+      .writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        publish(batch)(
+          aggs => IdempotentSink.writeBatch(anomalies(aggs, kmCenters, kmThreshold),
+            s"$outDir/anomalias_kmeans", batchId),
+          aggs => IdempotentSink.writeBatch(anomalies(aggs, bisCenters, bisThreshold),
+            s"$outDir/anomalias_bisect_kmeans", batchId))
+      }
+      .option("checkpointLocation", s"$outDir/_checkpoints/anomalias")
+      .trigger(trigger))
 
     // F2 + A2 + A3: staged cancelled keys (already per-batch deduped) →
     // dedup within the watermark horizon → 8 min/1 min sliding count
@@ -179,26 +208,6 @@ object Pipeline {
     // batch instead of in an extra empty trigger after each one
     val qCancel = start(updateSink(cancelled, "cancelaciones"),
       Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
-
-    // F4 + P7 + A4 + F5 + P9: staged good lines → typed purchases → ONE
-    // stateful invoice aggregate, scored against BOTH models in the same
-    // foreachBatch (scoring is stateless column math over the emitted
-    // updates — it needs no second state store or source scan)
-    val purchases = toPurchaseLines(PurchaseCsv.parseLines(
-      spark.readStream.schema(Schemas.kafkaRecord).parquet(s"$staged/good/b*").select($"value")))
-    val idleMs = if (once) 0L else 20000L // delete-on-idle ≈ one trigger
-    val qAnomalies = start(InvoiceStateMachine(purchases, idleTimeoutMs = idleMs).toDF()
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        publish(batch)(
-          aggs => IdempotentSink.writeBatch(anomalies(aggs, kmCenters, kmThreshold),
-            s"$outDir/anomalias_kmeans", batchId),
-          aggs => IdempotentSink.writeBatch(anomalies(aggs, bisCenters, bisThreshold),
-            s"$outDir/anomalias_bisect_kmeans", batchId))
-      }
-      .option("checkpointLocation", s"$outDir/_checkpoints/anomalias")
-      .trigger(trigger))
 
     Seq(qRoute, qCancel, qAnomalies)
   }

@@ -41,7 +41,7 @@ object Persistence {
     * credentials), or the defaults outside one. */
   private def hadoopConf: Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .fold(new Configuration())(_.sparkContext.hadoopConfiguration)
+      .fold(new Configuration())(graft.GraftSession.hadoopConf)
 
   /** Where session-local model artifacts live (scratch, not checked in). */
   def artifactDir(key: String): String =

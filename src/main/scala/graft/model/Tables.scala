@@ -65,7 +65,7 @@ object Tables {
     * same-named part files would not rotate the key. */
   def fingerprint(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.GraftSession.fileSystem(spark, p)
     def walk(path: org.apache.hadoop.fs.Path): Seq[String] = {
       val st = fs.getFileStatus(path)
       if (st.isDirectory) fs.listStatus(path).toSeq.flatMap(c => walk(c.getPath))

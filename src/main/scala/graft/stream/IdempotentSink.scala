@@ -3,6 +3,8 @@ package graft.stream
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession
+
 /** Idempotent per-batch parquet commit for `foreachBatch` sinks.
   *
   * `foreachBatch` is at-least-once: a crash between the write and the
@@ -44,7 +46,7 @@ object IdempotentSink {
     * return here would fail the restarted query and strand its state. */
   def writeBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
     val out = new Path(dir)
-    val fs = out.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(batch.sparkSession, out)
     val target = new Path(out, s"b$batchId")
     // committed — republish nothing. A batch directory that [[compact]]
     // consumed (and deleted) is STILL committed: the manifest remembers
@@ -81,7 +83,7 @@ object IdempotentSink {
   def writeRoutedBatch(classified: DataFrame, baseDir: String, routeCol: String,
                        batchId: Long, onePerRoute: Boolean = false): Unit = {
     val base = new Path(baseDir)
-    val fs = base.getFileSystem(classified.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(classified.sparkSession, base)
     // A single route directory existing is NOT proof the whole batch
     // committed (a crash can land between per-route renames), so full
     // completion gets its own marker: `_committed/b<id>` is created only
@@ -133,7 +135,7 @@ object IdempotentSink {
   private def readVisible(spark: SparkSession, dir: String,
                           mergeSchema: Boolean): DataFrame = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, base)
     val (g, _, paths) = visibleFlat(fs, base)
     val reader = spark.read.option("recursiveFileLookup", "true")
       .option("mergeSchema", mergeSchema)
@@ -299,7 +301,7 @@ object IdempotentSink {
   def compact(spark: SparkSession, dir: String, targetFiles: Int = 1,
               purge: Option[DataFrame => DataFrame] = None): Boolean = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, base)
     if (!fs.exists(base)) return false
     recoverCompaction(fs, base)
     val (g, consumed, paths) = visibleFlat(fs, base)
@@ -361,7 +363,7 @@ object IdempotentSink {
                    targetFiles: Int = 1,
                    purge: Option[DataFrame => DataFrame] = None): Boolean = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, base)
     if (!fs.exists(base)) return false
     val (_, _, paths) = visibleFlat(fs, base)
     if (paths.count(p => isGenDir(p.getName, 'b')) <= maxHot) false
@@ -374,7 +376,7 @@ object IdempotentSink {
                          maxHot: Int, shufflePartitions: Int = 16,
                          purge: Option[DataFrame => DataFrame] = None): Boolean = {
     val base = new Path(baseDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, base)
     if (!fs.exists(base)) return false
     val (_, consumed) = manifest(fs, base)
     if (hotRouted(fs, base, consumed).size <= maxHot) false
@@ -426,7 +428,7 @@ object IdempotentSink {
                     shufflePartitions: Int = 16,
                     purge: Option[DataFrame => DataFrame] = None): Boolean = {
     val base = new Path(baseDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, base)
     if (!fs.exists(base)) return false
     recoverCompaction(fs, base)
     val (g, consumed) = manifest(fs, base)
@@ -508,7 +510,7 @@ object IdempotentSink {
   def readRouted(spark: SparkSession, baseDir: String, routeCol: String,
                  routes: Option[Seq[String]] = None): Option[DataFrame] = {
     val base = new Path(baseDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, base)
     if (!fs.exists(base)) return None
     val (g, consumed) = manifest(fs, base)
     val routeDirs: Seq[Path] = routes match {

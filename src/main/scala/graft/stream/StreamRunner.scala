@@ -3,7 +3,10 @@ package graft.stream
 import java.nio.file.{Files, Paths}
 import java.util.UUID
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Harness that runs a finite streaming plan to completion and hands back
@@ -55,30 +58,52 @@ object StreamRunner {
     * `partitions` (default [[StatePartitions]]) and every `conf` entry set
     * — the settings a stream captures at `start()`, e.g.
     * `spark.sql.streaming.noDataMicroBatches.enabled` — then restore the
-    * session's prior values and return the query. The query keeps running
-    * after the restore (continuous mode): the captured values ride its
-    * cloned session and the checkpoint.
+    * session's prior values once the query has created its sources, and
+    * return the query. The query keeps running after the restore
+    * (continuous mode): the captured values ride its cloned session and
+    * the checkpoint.
     *
     * SIDE EFFECT, by construction: the pin mutates the SESSION-GLOBAL
     * conf, so (a) any concurrent batch query on the same session runs
     * with the pinned values while `writer.start()` runs — the signature
-    * keeps that window down to `start()` alone, as no caller-supplied
-    * body (an await, a model load) can run inside it — and (b) batch work
+    * keeps that window down to `start()` and the query's source set-up,
+    * as no caller-supplied body (an await, a model load) can run inside
+    * it — and (b) batch work
     * inside `foreachBatch` bodies inherits the pin for the query's whole
     * lifetime via the streaming session cloned at `start()` — restoring
     * the outer conf cannot reach that clone. (b) is usually right (a
     * micro-batch is small), but a foreachBatch body doing heavy
     * aggregation should set `spark.sql.shuffle.partitions` explicitly on
     * `batch.sparkSession` — that is the cloned session — to reclaim
-    * batch-side parallelism. */
+    * batch-side parallelism.
+    *
+    * Every stream also starts under [[LocalFs.conf]]:
+    * `fs.file.impl`, `fs.AbstractFileSystem.file.impl` and
+    * `fs.file.impl.disable.cache=true`. They ride the cloned session like
+    * the pins above, so its checkpoint logs, state-store files and
+    * `foreachBatch` writes on `file:` start no `chmod` or `readlink` child
+    * process, whoever built the session. `disable.cache` is what makes
+    * `fs.file.impl` count: Hadoop caches `file:` file systems per JVM,
+    * not per conf, so without it a stream would get the default file
+    * system any earlier caller cached. */
   def start[T](spark: SparkSession, writer: DataStreamWriter[T],
                partitions: Int = StatePartitions,
                conf: Map[String, String] = Map.empty): StreamingQuery = {
-    val pins = conf + ("spark.sql.shuffle.partitions" -> partitions.toString)
+    val pins = LocalFs.conf ++ conf + ("spark.sql.shuffle.partitions" -> partitions.toString)
     val prior = pins.keys.map(key => key -> spark.conf.getOption(key))
     pins.foreach { case (key, value) => spark.conf.set(key, value) }
-    try writer.start()
-    finally prior.foreach { case (key, value) =>
+    try {
+      val query = writer.start()
+      // the query creates its sources after start() returns, from the
+      // caller's session (a file source's log writes under that conf):
+      // the pins stay until they exist. A query that fails first reports
+      // it through its own await, as before.
+      query match {
+        case q: StreamingQueryWrapper => Try(q.streamingQuery.awaitInitialization(Long.MaxValue))
+        case _ =>
+      }
+      query
+    } finally prior.foreach { case (key, value) =>
       value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }

@@ -42,7 +42,7 @@ object VersionedSnapshot {
   def dir(base: String, id: Long): String = s"$base/v$id"
 
   private def fsOf(spark: SparkSession, base: Path): FileSystem =
-    base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.GraftSession.fileSystem(spark, base)
 
   /** A committed snapshot directory contains only part files (plus
     * marker files) — any DIRECTORY child is the footprint of a LOST

@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * SparkSession builder under `src/`, and the suite runs under exactly
   * the settings that ship. The scratch policy too: streams take their
   * scratch directories from [[graft.stream.StreamRunner.scratchDir]],
-  * and deleting them leaves the memoized fixtures alone. */
+  * and deleting them leaves the memoized fixtures alone. And the Hadoop
+  * conf policy: the repo's file-system calls go through
+  * [[GraftSession.hadoopConf]]. */
 class GraftSessionSpec extends SparkSuite {
 
   /** Every path under `root`, `root` included. */
@@ -39,6 +41,12 @@ class GraftSessionSpec extends SparkSuite {
     // split so this file does not match itself
     assert(filesContaining("src", "target/" + "stream-scratch") ==
       List("src/main/scala/graft/stream/StreamRunner.scala"))
+  }
+
+  test("under src/main only GraftSession.hadoopConf and Lineage read the context's Hadoop conf") {
+    // the repo's own file-system calls take the session's conf
+    assert(filesContaining("src/main", ".hadoopConfiguration") == List(
+      "src/main/scala/graft/GraftSession.scala", "src/main/scala/graft/ops/Lineage.scala"))
   }
 
   test("deleteScratchDirs leaves no registered scratch dir and no fixture touched") {
