@@ -143,8 +143,9 @@ object Pipeline {
         publish(batch)(
           routed => IdempotentSink.writeBatch(routed.filter(col("route") === "invalid")
             .select(col("key"), col("value")), s"$outDir/facturas_erroneas", batchId),
-          // per-batch distinct (A2, ref :68-71) on one partition, so no
-          // shuffle + arrival timestamp for the processing-time window
+          // per-batch distinct (A2, ref :68-71), on one partition so it
+          // needs no shuffle, + arrival timestamp for the processing-time
+          // window
           routed => IdempotentSink.writeBatch(graft.stream.CancellationWindow.perBatchDistinct(
               routed.filter(col("route") === "cancelled").select(col("key")).coalesce(1), "key")
             .withColumn("ts", current_timestamp()), s"$staged/cancelled", batchId),

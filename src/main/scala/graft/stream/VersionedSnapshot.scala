@@ -3,6 +3,8 @@ package graft.stream
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession
+
 /** Atomic versioned-SNAPSHOT artifact: `base/v<id>` directories, each a
   * self-contained full snapshot of some maintained state (an incremental
   * view, an upsert table, a fold artifact). Newest committed version
@@ -41,9 +43,6 @@ object VersionedSnapshot {
 
   def dir(base: String, id: Long): String = s"$base/v$id"
 
-  private def fsOf(spark: SparkSession, base: Path): FileSystem =
-    graft.GraftSession.fileSystem(spark, base)
-
   /** A committed snapshot directory contains only part files (plus
     * marker files) — any DIRECTORY child is the footprint of a LOST
     * publish race (Hadoop rename-into-existing-directory moved the
@@ -76,7 +75,7 @@ object VersionedSnapshot {
     * retrying; the winner's committed snapshot stands untouched. */
   def publish(df: DataFrame, base: String, id: Long): Unit = {
     val basePath = new Path(base)
-    val fs = fsOf(df.sparkSession, basePath)
+    val fs = GraftSession.fileSystem(df.sparkSession, basePath)
     val target = new Path(basePath, s"v$id")
     if (fs.exists(target)) { repairNested(fs, target); return }
     // per-attempt unique staging: a crashed attempt's leftover is
@@ -103,7 +102,7 @@ object VersionedSnapshot {
     * it lives under the underscore-prefixed `_staging`). */
   def versionIds(spark: SparkSession, base: String): Seq[Long] = {
     val basePath = new Path(base)
-    val fs = fsOf(spark, basePath)
+    val fs = GraftSession.fileSystem(spark, basePath)
     if (!fs.exists(basePath)) return Seq.empty
     fs.listStatus(basePath).iterator
       .filter(_.isDirectory)
@@ -121,7 +120,7 @@ object VersionedSnapshot {
     // repair-on-read: a lost publish race whose loser never retried must
     // not leave this version unreadable (nested junk ⇒ conflicting
     // directory structures); one driver-side listStatus when clean
-    repairNested(fsOf(spark, basePath), new Path(basePath, s"v$id"))
+    repairNested(GraftSession.fileSystem(spark, basePath), new Path(basePath, s"v$id"))
     spark.read.parquet(dir(base, id))
   }
 
@@ -192,7 +191,7 @@ object VersionedSnapshot {
     val ids = versionIds(spark, base)
     val drop = ids.dropRight(keep)
     val basePath = new Path(base)
-    val fs = fsOf(spark, basePath)
+    val fs = GraftSession.fileSystem(spark, basePath)
     drop.foreach(id => fs.delete(new Path(basePath, s"v$id"), true))
     // stale staging left by a crash: the legacy flat `_staging/v<id>`
     // layout, or a per-attempt nonce dir whose contents are all pruned
